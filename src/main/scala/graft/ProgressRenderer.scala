@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicReference
 
+import graft.engine.Engine
+
 import org.apache.spark.sql.SparkSession
 
 /** Live per-model progress for the CLI `generate` path — reference parity
@@ -19,16 +21,6 @@ final class ProgressRenderer(spark: SparkSession, intervalMs: Long = 500L) {
   private val current = new AtomicReference[String](null)
   @volatile private var running = true
 
-  private def pct(m: String): Double = {
-    val tracker = spark.sparkContext.statusTracker
-    val infos = tracker.getJobIdsForGroup(s"cli-gen::$m")
-      .flatMap(j => tracker.getJobInfo(j))
-      .flatMap(_.stageIds().flatMap(sid => tracker.getStageInfo(sid)))
-    val total = infos.map(_.numTasks()).sum
-    val done = infos.map(_.numCompletedTasks()).sum
-    if (total == 0) 0.0 else done.toDouble * 100.0 / total
-  }
-
   private def render(m: String, p: Double): Unit = {
     val width = 24
     val filled = math.max(0, math.min(width, math.round(p / 100.0 * width).toInt))
@@ -44,7 +36,7 @@ final class ProgressRenderer(spark: SparkSession, intervalMs: Long = 500L) {
       // ticker silently freezes the bar for every remaining model
       try {
         val m = current.get()
-        if (m != null) render(m, pct(m))
+        if (m != null) render(m, Engine.groupProgress(spark, s"cli-gen::$m"))
       } catch { case scala.util.control.NonFatal(_) => () }
       Thread.sleep(intervalMs)
     } catch { case _: InterruptedException => () }

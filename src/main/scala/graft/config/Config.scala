@@ -13,8 +13,6 @@ import java.time.Instant
   * form — this IS the logical plan the engine compiles to Spark expressions.
   */
 final case class GenerationConfig(
-    workersCount: Int,
-    batchSize: Long,
     randomSeed: Long, // as configured; 0 means "non-idempotent, derive from clock"
     realSeed: Long, // actually used
     output: OutputConfig,
@@ -89,7 +87,7 @@ final case class StringParams(
   * independently (`value/datetime.go:29-50`). */
 final case class DateTimeParams(fromSec: Long, fromNanos: Int, toSec: Long, toNanos: Int)
 
-final case class ParquetColumnParams(encoding: String, compression: String)
+final case class ParquetColumnParams(encoding: String)
 
 sealed trait OutputConfig { def typ: String; def dir: String }
 final case class DevNullOutput(dir: String = "") extends OutputConfig { val typ = "devnull" }
@@ -125,8 +123,6 @@ final case class HttpOutput(
     extends OutputConfig { val typ = "http" }
 
 object Defaults {
-  val BatchSize = 1000L
-  val WorkersPerCpu = 4
   val IntBitWidth = 32
   val FloatBitWidth = 32
   val StringMinLength = 1

@@ -62,9 +62,6 @@ object ConfigParser {
     val errs = ArrayBuffer.empty[String]
     if (root == null || !root.isObject) throw ConfigException(Seq("config must be a mapping"))
 
-    val workers = optInt(root, "workers_count")
-      .getOrElse(Defaults.WorkersPerCpu * Runtime.getRuntime.availableProcessors())
-    val batch = optLong(root, "batch_size").getOrElse(Defaults.BatchSize)
     val seed = optLong(root, "random_seed").getOrElse(0L)
     // seed 0 => time-based, explicitly non-idempotent (reference
     // `generator/utils.go:80-84`)
@@ -110,7 +107,7 @@ object ConfigParser {
     }
 
     if (errs.nonEmpty) throw ConfigException(errs.toSeq)
-    GenerationConfig(workers, batch, seed, realSeed, output, models, ignore)
+    GenerationConfig(seed, realSeed, output, models, ignore)
   }
 
   private def parseModel(name: String, n: JsonNode, errs: ArrayBuffer[String]): ModelConfig = {
@@ -169,7 +166,7 @@ object ConfigParser {
         "DELTA_LENGTH_BYTE_ARRAY", "BYTE_STREAM_SPLIT", "PLAIN_DICT", "RLE_DICTIONARY")
       if (!known.contains(enc.toUpperCase))
         errs += s"$where: unknown parquet encoding '$enc' (expected one of ${known.filter(_.nonEmpty).toSeq.sorted.mkString(", ")})"
-      ParquetColumnParams(enc, optText(p, "compression").getOrElse(""))
+      ParquetColumnParams(enc)
     }
 
     val inlineFields =

@@ -3,7 +3,7 @@ package graft.engine
 import graft.config._
 import graft.gen.Planner
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Job runner: validated config -> one Spark write action per model.
@@ -71,6 +71,20 @@ object Engine {
     math.max(cores, math.min(byFile.toLong, 100000L).toInt)
   }
 
+  /** Completed share (0..100) of the Spark tasks in one job group, read
+    * from the status tracker: the live per-model progress the CLI bar and
+    * the task server's `/status` report. 0 until the group's first stage is
+    * known. */
+  def groupProgress(spark: SparkSession, group: String): Double = {
+    val tracker = spark.sparkContext.statusTracker
+    val stages = tracker.getJobIdsForGroup(group)
+      .flatMap(j => tracker.getJobInfo(j))
+      .flatMap(_.stageIds().flatMap(sid => tracker.getStageInfo(sid)))
+    val total = stages.map(_.numTasks()).sum
+    val done = stages.map(_.numCompletedTasks()).sum
+    if (total == 0) 0.0 else done.toDouble * 100.0 / total
+  }
+
   /** Run the whole generation job: plan, conflict-check, write every model,
     * write checkpoint metadata. Returns per-model row counts.
     * `resume = true` skips the conflict pre-flight (output is appended after
@@ -82,34 +96,29 @@ object Engine {
       onModelDone: String => Unit = _ => (),
       onSliceDone: (String, Long) => Unit = (_, _) => ()): Map[String, Long] = {
     if (!resume) Output.preflight(spark, cfg, force)
-    val counts = frames(spark, cfg)
-      .filter { case (m, _) => m.generateTo > m.generateFrom }
-      .map { case (model, df) =>
-        // per-model hooks let a driver (the task server) scope job groups /
-        // progress counters to ONE model — the reference reports generation
-        // progress as a per-model percentage map, not one job-wide number
-        onModelStart(model.name)
-        if (model.checkpointRows > 0
-            && model.generateTo - model.generateFrom > model.checkpointRows) {
-          // intra-model checkpointing: ranged sub-writes, one transactional
-          // checkpoint per slice. Values are pure functions of the absolute
-          // row id, so the slice boundaries never change content — only how
-          // much a crash mid-model costs to redo (one slice, not the model).
-          var a = model.generateFrom
-          while (a < model.generateTo) {
-            val b = math.min(a + model.checkpointRows, model.generateTo)
-            val slice = model.copy(generateFrom = a, generateTo = b)
-            Output.writeModel(spark, cfg, slice, modelFrame(spark, cfg, slice))
-            onSliceDone(model.name, b)
-            a = b
-          }
-        } else {
-          Output.writeModel(spark, cfg, model, df)
-          onSliceDone(model.name, model.generateTo)
-        }
-        onModelDone(model.name)
-        model.name -> (model.generateTo - model.generateFrom)
-      }.toMap
+    val counts = cfg.activeModels.filter(m => m.generateTo > m.generateFrom).map { model =>
+      // per-model hooks let a driver (the task server) scope job groups /
+      // progress counters to ONE model — the reference reports generation
+      // progress as a per-model percentage map, not one job-wide number
+      onModelStart(model.name)
+      // one ranged write per slice of `checkpoint_rows` rows (the whole
+      // model when unset), each followed by its transactional checkpoint.
+      // Values are pure functions of the absolute row id, so the slice
+      // boundaries never change content — only how much a crash mid-model
+      // costs to redo (one slice, not the model).
+      val stride =
+        if (model.checkpointRows > 0) model.checkpointRows else model.generateTo - model.generateFrom
+      var a = model.generateFrom
+      while (a < model.generateTo) {
+        val b = math.min(a + stride, model.generateTo)
+        val slice = model.copy(generateFrom = a, generateTo = b)
+        Output.writeModel(spark, cfg, slice, modelFrame(spark, cfg, slice))
+        onSliceDone(model.name, b)
+        a = b
+      }
+      onModelDone(model.name)
+      model.name -> (model.generateTo - model.generateFrom)
+    }.toMap
     Output.writeBackup(spark, cfg)
     counts
   }

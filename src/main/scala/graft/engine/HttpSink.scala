@@ -43,23 +43,20 @@ object HttpSink {
         val body = BodyTemplate.render(tmpl, modelName, batch, schema)
         postWithRetry(client, endpoint, headers, body, timeoutMs)
       }
-      if (workers == 1) rows.grouped(batchSize).foreach(post)
-      else {
-        // `workers_count` writer threads PER TASK (reference runs N writer
-        // goroutines per output — http.go:35-326): request latency overlaps
-        // instead of serializing the partition on one in-flight POST. A
-        // bounded queue keeps at most `workers` batches materialized; a post
-        // failure (after its own retry policy) fails the task.
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(workers)
-        val pending = new java.util.ArrayDeque[java.util.concurrent.Future[_]]()
-        try {
-          rows.grouped(batchSize).foreach { batch =>
-            while (pending.size >= workers) pending.poll().get() // propagate failures
-            pending.add(pool.submit(new Runnable { def run(): Unit = post(batch) }))
-          }
-          while (!pending.isEmpty) pending.poll().get()
-        } finally pool.shutdownNow()
-      }
+      // `workers_count` writer threads PER TASK (reference runs N writer
+      // goroutines per output — http.go:35-326): request latency overlaps
+      // instead of serializing the partition on one in-flight POST. A
+      // bounded queue keeps at most `workers` batches materialized; a post
+      // failure (after its own retry policy) fails the task.
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(workers)
+      val pending = new java.util.ArrayDeque[java.util.concurrent.Future[_]]()
+      try {
+        rows.grouped(batchSize).foreach { batch =>
+          while (pending.size >= workers) pending.poll().get() // propagate failures
+          pending.add(pool.submit(new Runnable { def run(): Unit = post(batch) }))
+        }
+        while (!pending.isEmpty) pending.poll().get()
+      } finally pool.shutdownNow()
     }
   }
 

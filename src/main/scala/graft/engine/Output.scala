@@ -5,7 +5,7 @@ import graft.config._
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType, TimestampType}
 
@@ -46,24 +46,36 @@ object Output {
     * uncommitted and wipe it). `FileContext.rename(OVERWRITE)` is atomic on
     * HDFS and local file://; on object stores (s3a) rename is copy+delete and
     * this remains best-effort — the documented caveat of metadata-on-object-
-    * store layouts. */
+    * store layouts.
+    *
+    * Concurrent jobs may share one dir (task-server requests all write its
+    * `backup.json`), so every write gets its own temp name, and renames onto
+    * one target are serialized within the JVM: on the local filesystem an
+    * OVERWRITE rename is delete-then-rename for the file and again for its
+    * `.crc`, and two interleaved ones fail or pair one file with the other's
+    * checksum. */
   private def writeStringAtomic(fs: FileSystem, target: HPath, content: String): Unit = {
     fs.mkdirs(target.getParent)
     val qTarget = fs.makeQualified(target)
-    val tmp = fs.makeQualified(new HPath(target.getParent, s".${target.getName}.tmp"))
+    val tmp = fs.makeQualified(
+      new HPath(target.getParent, s".${target.getName}.${java.util.UUID.randomUUID()}.tmp"))
     val out = fs.create(tmp, true)
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
-      fc.rename(tmp, qTarget, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        // FS with no FileContext binding: fall back to the non-atomic form
-        if (fs.exists(qTarget)) fs.delete(qTarget, false)
-        fs.rename(tmp, qTarget)
+    renameLocks(Math.floorMod(qTarget.hashCode, renameLocks.length)).synchronized {
+      try {
+        val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
+        fc.rename(tmp, qTarget, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      } catch {
+        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+          // FS with no FileContext binding: fall back to the non-atomic form
+          if (fs.exists(qTarget)) fs.delete(qTarget, false)
+          fs.rename(tmp, qTarget)
+      }
     }
   }
+
+  private val renameLocks = Array.fill(64)(new Object)
 
   private def readString(fs: FileSystem, p: HPath): Option[String] =
     if (!fs.exists(p)) None
@@ -96,34 +108,43 @@ object Output {
     walk(root)
   }
 
+  /** Resume metadata (`backup.json`, checkpoints) lives only under a
+    * configured output dir. */
+  private def hasMetaDir(cfg: GenerationConfig): Boolean = cfg.output.dir.nonEmpty
+
+  /** Only the file sinks leave data files to conflict-check, clean and
+    * checkpoint; devnull and http write none. */
+  private def writesFiles(cfg: GenerationConfig): Boolean = cfg.output match {
+    case _: DevNullOutput | _: HttpOutput => false
+    case _ => true
+  }
+
   /** Conflict pre-flight (reference `output/general/conflicts.go:25-96`):
     * refuse to touch directories holding previous model output unless forced. */
   def preflight(spark: SparkSession, cfg: GenerationConfig, force: Boolean): Unit =
-    cfg.output match {
-      case _: DevNullOutput | _: HttpOutput => ()
-      case _ =>
-        cfg.activeModels.foreach { m =>
-          val (fs, dir) = fileSystem(spark, modelPath(cfg, m))
-          if (fs.exists(dir)) {
-            if (force) {
-              fs.delete(dir, true)
-              if (cfg.output.dir.nonEmpty) {
-                // stale checkpoint would poison a later resume
-                val (cfs, cp) = fileSystem(spark, checkpointPath(cfg, m))
-                if (cfs.exists(cp)) cfs.delete(cp, false)
-              }
-            } else if (fs.listStatus(dir).nonEmpty)
-              throw new IllegalStateException(
-                s"output dir $dir already contains data; use force to overwrite")
-          }
+    if (writesFiles(cfg)) {
+      cfg.activeModels.foreach { m =>
+        val (fs, dir) = fileSystem(spark, modelPath(cfg, m))
+        if (fs.exists(dir)) {
+          if (force) {
+            fs.delete(dir, true)
+            if (hasMetaDir(cfg)) {
+              // stale checkpoint would poison a later resume
+              val (cfs, cp) = fileSystem(spark, checkpointPath(cfg, m))
+              if (cfs.exists(cp)) cfs.delete(cp, false)
+            }
+          } else if (fs.listStatus(dir).nonEmpty)
+            throw new IllegalStateException(
+              s"output dir $dir already contains data; use force to overwrite")
         }
-        // force also invalidates the backup snapshot: if the forced run dies
-        // before writeBackup rewrites it, a stale fingerprint would refuse a
-        // legitimate resume of the NEW config even though the old data is gone
-        if (force && cfg.output.dir.nonEmpty) {
-          val (bfs, bp) = fileSystem(spark, s"${cfg.output.dir}/backup.json")
-          if (bfs.exists(bp)) bfs.delete(bp, false)
-        }
+      }
+      // force also invalidates the backup snapshot: if the forced run dies
+      // before writeBackup rewrites it, a stale fingerprint would refuse a
+      // legitimate resume of the NEW config even though the old data is gone
+      if (force && hasMetaDir(cfg)) {
+        val (bfs, bp) = fileSystem(spark, s"${cfg.output.dir}/backup.json")
+        if (bfs.exists(bp)) bfs.delete(bp, false)
+      }
     }
 
   /** Shadow-column prefix for `write_to_output: true` partition columns:
@@ -144,54 +165,18 @@ object Output {
       case _: DevNullOutput =>
         df.write.format("noop").mode(SaveMode.Overwrite).save()
 
+      case o: HttpOutput =>
+        HttpSink.write(df, model.name, o)
+
       case o: ParquetOutput =>
-        val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
-        spark.conf.set(
-          "spark.sql.parquet.outputTimestampType",
-          if (o.timestampUnit == "ms") "TIMESTAMP_MILLIS" else "TIMESTAMP_MICROS")
-        try {
-          var w = df.write
-            .option("compression", o.compression)
-            .option("maxRecordsPerFile", model.rowsPerFile)
-            .mode(SaveMode.Append)
-          // per-column encoding config (SURVEY §7): dictionary on/off is
-          // per-column; v2-only encodings (DELTA_*) additionally need
-          // parquet.writer.version=v2 — parquet-mr then emits
-          // DELTA_BINARY_PACKED for ints and DELTA_BYTE_ARRAY for strings
-          // on the dictionary-off columns (footers asserted in ResumeSpec).
-          // BYTE_STREAM_SPLIT has NO conf hook in parquet-hadoop 1.16
-          // (ParquetOutputFormat exposes no key for it): declaring it still
-          // selects v2 + dictionary-off but floats fall back to PLAIN —
-          // documented divergence until parquet-mr exposes the knob.
-          var v2Cols = List.empty[String]
-          model.columns.flatMap(c => c.parquet.map(c.name -> _)).foreach { case (name, p) =>
-            if (p.encoding.nonEmpty) {
-              val enc = p.encoding.toUpperCase
-              val dict = enc.contains("DICT")
-              w = w.option(s"parquet.enable.dictionary#$name", dict.toString)
-              if (enc.startsWith("DELTA_") || enc == "BYTE_STREAM_SPLIT") v2Cols ::= name
-            }
-          }
-          if (v2Cols.nonEmpty) {
-            // parquet.writer.version is a FILE-level switch — one v2-only
-            // column encoding flips every column (and page headers) in the
-            // model's files to format v2; say so instead of flipping
-            // silently (r14 ADVICE), since v2 pages are unreadable to some
-            // older consumers
-            System.err.println(
-              s"[output] note: column(s) ${v2Cols.sorted.mkString(", ")} declare " +
-                "v2-only encodings; the whole parquet file for this model is " +
-                "written as format v2 (parquet.writer.version is file-level)")
-            w = w.option("parquet.writer.version", "v2")
-          }
-          if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
-          w.parquet(modelPath(cfg, model))
-        } finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
-          case None => spark.conf.unset("spark.sql.parquet.outputTimestampType")
-        }
-        renameShadowPartitionDirs(spark, modelPath(cfg, model))
-        writeCheckpoint(spark, cfg, model)
+        // the timestamp unit is a session conf, not a writer option: set it
+        // for this write only and restore the caller's value afterwards
+        val key = "spark.sql.parquet.outputTimestampType"
+        val prev = spark.conf.getOption(key)
+        spark.conf.set(key, if (o.timestampUnit == "ms") "TIMESTAMP_MILLIS" else "TIMESTAMP_MICROS")
+        try commitFiles(spark, cfg, model, partitionCols,
+          df.write.format("parquet").options(parquetOptions(o, model)))
+        finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
 
       case o: CsvOutput =>
         // float precision + datetime formatting parity with the reference CSV
@@ -206,36 +191,62 @@ object Output {
             case _ => acc
           }
         }
-        var w = formatted.write
-          .option("header", !o.withoutHeaders)
-          .option("sep", o.delimiter)
-          .option("maxRecordsPerFile", model.rowsPerFile)
-          .mode(SaveMode.Append)
-        if (o.datetimeFormat.nonEmpty && o.datetimeFormat != "unix")
-          w = w.option("timestampFormat", o.datetimeFormat)
-        if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
-        w.csv(modelPath(cfg, model))
-        renameShadowPartitionDirs(spark, modelPath(cfg, model))
-        writeCheckpoint(spark, cfg, model)
+        val pattern =
+          if (o.datetimeFormat.nonEmpty && o.datetimeFormat != "unix") Map("timestampFormat" -> o.datetimeFormat)
+          else Map.empty[String, String]
+        commitFiles(spark, cfg, model, partitionCols, formatted.write.format("csv")
+          .option("header", !o.withoutHeaders).option("sep", o.delimiter).options(pattern))
 
       case o: JsonlOutput =>
         // newline-delimited JSON: Spark's json writer is already one object
         // per line, splittable per partition — the natural corpus layout.
         // ignoreNullFields=false by default so every line carries the full
         // schema (downstream readers need not infer across files).
-        var w = df.write
-          .option("compression", o.compression)
-          .option("ignoreNullFields", o.ignoreNullFields)
-          .option("maxRecordsPerFile", model.rowsPerFile)
-          .mode(SaveMode.Append)
-        if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
-        w.json(modelPath(cfg, model))
-        renameShadowPartitionDirs(spark, modelPath(cfg, model))
-        writeCheckpoint(spark, cfg, model)
-
-      case o: HttpOutput =>
-        HttpSink.write(df, model.name, o)
+        commitFiles(spark, cfg, model, partitionCols, df.write.format("json")
+          .option("compression", o.compression).option("ignoreNullFields", o.ignoreNullFields))
     }
+  }
+
+  /** The one commit every file sink shares: file rotation, append, hive
+    * partition routing, then the post-commit partition-dir rename and the
+    * model's checkpoint. */
+  private def commitFiles(
+      spark: SparkSession, cfg: GenerationConfig, model: ModelConfig,
+      partitionCols: Seq[String], writer: DataFrameWriter[Row]): Unit = {
+    val path = modelPath(cfg, model)
+    val w = writer.option("maxRecordsPerFile", model.rowsPerFile).mode(SaveMode.Append)
+    (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).save(path)
+    renameShadowPartitionDirs(spark, path)
+    writeCheckpoint(spark, cfg, model)
+  }
+
+  /** Parquet writer options: codec plus per-column encoding config (SURVEY
+    * §7). Dictionary on/off is per-column; v2-only encodings (DELTA_*)
+    * additionally need parquet.writer.version=v2 — parquet-mr then emits
+    * DELTA_BINARY_PACKED for ints and DELTA_BYTE_ARRAY for strings on the
+    * dictionary-off columns (footers asserted in ResumeSpec).
+    * BYTE_STREAM_SPLIT has NO conf hook in parquet-hadoop 1.16
+    * (ParquetOutputFormat exposes no key for it): declaring it still selects
+    * v2 + dictionary-off but floats fall back to PLAIN — documented
+    * divergence until parquet-mr exposes the knob. */
+  private def parquetOptions(o: ParquetOutput, model: ModelConfig): Map[String, String] = {
+    val encoded = model.columns.flatMap(c => c.parquet.map(c.name -> _.encoding.toUpperCase))
+      .filter(_._2.nonEmpty)
+    val v2Cols = encoded.collect {
+      case (name, enc) if enc.startsWith("DELTA_") || enc == "BYTE_STREAM_SPLIT" => name
+    }
+    if (v2Cols.nonEmpty)
+      // parquet.writer.version is a FILE-level switch — one v2-only column
+      // encoding flips every column (and page headers) in the model's files
+      // to format v2; say so instead of flipping silently (r14 ADVICE),
+      // since v2 pages are unreadable to some older consumers
+      System.err.println(
+        s"[output] note: column(s) ${v2Cols.sorted.mkString(", ")} declare " +
+          "v2-only encodings; the whole parquet file for this model is " +
+          "written as format v2 (parquet.writer.version is file-level)")
+    Map("compression" -> o.compression) ++
+      encoded.map { case (name, enc) => s"parquet.enable.dictionary#$name" -> enc.contains("DICT").toString } ++
+      (if (v2Cols.nonEmpty) Map("parquet.writer.version" -> "v2") else Map.empty)
   }
 
   /** Spark's directory name for a null partition value. The reference
@@ -302,7 +313,7 @@ object Output {
     * checkpoint is written only after a fully successful action, so its
     * `saved_rows` is a true prefix by construction. */
   def savedRows(spark: SparkSession, cfg: GenerationConfig, model: ModelConfig): Long = {
-    if (cfg.output.dir.isEmpty) return 0L
+    if (!hasMetaDir(cfg)) return 0L
     val (fs, p) = fileSystem(spark, checkpointPath(cfg, model))
     readString(fs, p).map(s => mapper.readTree(s).path("saved_rows").asLong(0L)).getOrElse(0L)
   }
@@ -331,11 +342,7 @@ object Output {
     * v1 writer only checkpointed after full success). A v2 checkpoint
     * (`"files"` list) cleans by the recorded set as before. */
   def cleanUncommitted(spark: SparkSession, cfg: GenerationConfig, model: ModelConfig): Unit = {
-    if (cfg.output.dir.isEmpty) return
-    cfg.output match {
-      case _: DevNullOutput | _: HttpOutput => return
-      case _ => ()
-    }
+    if (!hasMetaDir(cfg) || !writesFiles(cfg)) return
     val (fs, root) = fileSystem(spark, modelPath(cfg, model))
     if (!fs.exists(root)) return
     val (cfs, cp) = fileSystem(spark, checkpointPath(cfg, model))
@@ -380,7 +387,7 @@ object Output {
     * watermark, O(1) regardless of file count — replaces the full path
     * manifest; see [[cleanUncommitted]] for how a resume uses it. */
   private def writeCheckpoint(spark: SparkSession, cfg: GenerationConfig, model: ModelConfig): Unit = {
-    if (cfg.output.dir.isEmpty) return
+    if (!hasMetaDir(cfg)) return
     val (fs, root) = fileSystem(spark, modelPath(cfg, model))
     var count = 0L
     var maxMtime = 0L
@@ -418,7 +425,7 @@ object Output {
     * writes the `backup:"true"` field subset; we snapshot a digest plus
     * human-readable summary of the resolved config). */
   def writeBackup(spark: SparkSession, cfg: GenerationConfig): Unit = {
-    if (cfg.output.dir.isEmpty) return
+    if (!hasMetaDir(cfg)) return
     val models = cfg.models.toSeq.sortBy(_._1).map { case (n, m) =>
       s""""$n":{"rows_count":${m.rowsCount},"rows_per_file":${m.rowsPerFile},"columns":${m.columns.size}}"""
     }.mkString("{", ",", "}")
@@ -432,7 +439,7 @@ object Output {
     * the digest of the same field subset). No backup present -> nothing to
     * compare (fresh or pre-upgrade output dir). */
   def checkBackup(spark: SparkSession, cfg: GenerationConfig): Unit = {
-    if (cfg.output.dir.isEmpty) return
+    if (!hasMetaDir(cfg)) return
     val (fs, p) = fileSystem(spark, s"${cfg.output.dir}/backup.json")
     readString(fs, p).foreach { json =>
       val saved = mapper.readTree(json).path("fingerprint").asText("")

@@ -103,7 +103,7 @@ object TaskServer {
                 task.state = "done"
               } catch {
                 case e: Exception =>
-                  task.message = "\"" + String.valueOf(e.getMessage).replace("\"", "'") + "\""
+                  task.message = "\"" + esc(String.valueOf(e.getMessage)) + "\""
                   task.state = "failed"
               } finally {
                 spark.sparkContext.clearJobGroup()
@@ -113,7 +113,7 @@ object TaskServer {
           respond(ex, 200, s"""{"task_id":"$id"}""")
         }
       } catch {
-        case e: Exception => respond(ex, 400, s"""{"error":"${String.valueOf(e.getMessage).replace("\"", "'")}"}""")
+        case e: Exception => respond(ex, 400, s"""{"error":"${esc(String.valueOf(e.getMessage))}"}""")
       }
     })
 
@@ -127,15 +127,7 @@ object TaskServer {
           // forgets old jobs, so group math alone would regress to 0)
           def modelPct(m: String): Double =
             if (t.state != "running" || t.completedModels.contains(m)) 100.0
-            else {
-              val tracker = spark.sparkContext.statusTracker
-              val jobs = tracker.getJobIdsForGroup(s"${t.id}::$m")
-              val infos = jobs.flatMap(j => tracker.getJobInfo(j))
-                .flatMap(_.stageIds().flatMap(sid => tracker.getStageInfo(sid)))
-              val total = infos.map(_.numTasks()).sum
-              val done = infos.map(_.numCompletedTasks()).sum
-              if (total == 0) 0.0 else done.toDouble * 100.0 / total
-            }
+            else Engine.groupProgress(spark, s"${t.id}::$m")
           val pcts = t.models.map(m => m -> modelPct(m))
           val models = pcts.map { case (m, p) => f""""$m":$p%.1f""" }.mkString("{", ",", "}")
           val progress = if (pcts.isEmpty) 1.0 else pcts.map(_._2).sum / (100.0 * pcts.size)
