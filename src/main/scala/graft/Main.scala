@@ -15,6 +15,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Main {
 
+  /** The session every main builds (CLI verbs, Verify, PlanSweep, ScaleData,
+    * tools.Probe): `SPARK_GRAFT_CPUS` cores (default: all) and as many
+    * shuffle partitions, UTC, ANSI and AQE on. */
   def buildSession(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
     SparkSession.builder()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit sweep over every gate query WITHOUT executing them: builds
   * each `SparkEntry.queries` frame and reports WindowAudit / JoinAudit
   * findings — the dry-run that r15's lesson demands before wiring a new
@@ -16,13 +14,7 @@ object PlanSweep {
   def main(args: Array[String]): Unit =
     graft.operators.Residuals.withScope(graft.operators.Residuals.newScope()) {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Main.buildSession("graft-plansweep")
     spark.sparkContext.setLogLevel("ERROR")
     var findings = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

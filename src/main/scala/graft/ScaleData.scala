@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-factor amplifier for the test fixtures: builds an sfN directory
@@ -50,17 +50,11 @@ object ScaleData {
     val Array(srcDir, dstDir, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1, "factor must be >= 1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // overflow contracts across operators assume ANSI raises loudly —
-      // pinned, not inherited from the build default (r14 ADVICE)
-      .config("spark.sql.ansi.enabled", "true")
-      // match the fixtures' physical timestamp encoding (µs) so the
-      // footer-probe readers and DuckDB see the same thing they do on the
-      // driver-generated files
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Main.buildSession("graft-scaledata")
+    // match the fixtures' physical timestamp encoding (µs) so the
+    // footer-probe readers and DuckDB see the same thing they do on the
+    // driver-generated files
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(dstDir).mkdirs()
 

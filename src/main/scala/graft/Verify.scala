@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,16 +8,7 @@ object Verify {
     // release each other's in-flight caches (r11 verdict #8)
     graft.operators.Residuals.withScope(graft.operators.Residuals.newScope()) {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // overflow contracts across operators assume ANSI raises loudly —
-      // pinned, not inherited from the build default (r14 ADVICE)
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Main.buildSession("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Input self-protection (round-8 lesson): fingerprint every table and
@@ -68,20 +58,8 @@ object Verify {
       // gate doesn't accumulate every operator's cached lifetime
       graft.operators.Residuals.release()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${JsonString(k)}: ${JsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     // loud trailer + non-zero exit (r16 verdict #6): with per-query errors
@@ -95,7 +73,7 @@ object Verify {
     // #2a — CORRECTNESS_r14..r17 landed empty driver-side): one SHORT JSON
     // line, always last on stdout
     println(s"""{"verify_produced":$produced,"verify_total":${selected.size},"failed":[${
-      bad.map(q).mkString(",")}]}""")
+      bad.map(JsonString(_)).mkString(",")}]}""")
     if (bad.nonEmpty) sys.exit(1)
   }
 }

@@ -1,5 +1,7 @@
 package graft.engine
 
+import graft.JsonString
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
 
@@ -132,14 +134,14 @@ object BodyTemplate {
     }
     def jsonOf(path: List[String], dot: Option[Row]): String = (path, dot) match {
       case (Nil, None) =>
-        s"""{"ModelName":${HttpSink.jsonString(modelName)},"Rows":${HttpSink.rowsJson(rows, schema)}}"""
+        s"""{"ModelName":${JsonString(modelName)},"Rows":${HttpSink.rowsJson(rows, schema)}}"""
       case (List("Rows"), None) => HttpSink.rowsJson(rows, schema)
       case (Nil, Some(row)) => HttpSink.rowsJson(Seq(row), schema).stripPrefix("[").stripSuffix("]")
       case _ =>
         resolve(path, dot) match {
           case null => "null"
           case n @ (_: Byte | _: Short | _: Int | _: Long | _: Float | _: Double | _: Boolean) => n.toString
-          case other => HttpSink.jsonString(other.toString)
+          case other => JsonString(other.toString)
         }
     }
     def walk(ns: Vector[Node], dot: Option[Row]): Unit = ns.foreach {

@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.JsonString
 import graft.config.HttpOutput
 
 import org.apache.spark.sql.{DataFrame, Row}
@@ -89,34 +90,8 @@ object HttpSink {
       case TimestampType =>
         sb.append('"').append(row.getTimestamp(i).toInstant.toString).append('"')
       case _ =>
-        appendJsonString(sb, row.get(i).toString)
+        JsonString.append(sb, row.get(i).toString)
     }
-  }
-
-  private def appendJsonString(sb: java.lang.StringBuilder, s: String): Unit = {
-    sb.append('"')
-    var j = 0
-    while (j < s.length) {
-      val c = s.charAt(j)
-      c match {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case x if x < ' ' => sb.append(f"\\u${x.toInt}%04x")
-        case x => sb.append(x)
-      }
-      j += 1
-    }
-    sb.append('"')
-  }
-
-  /** JSON string literal (quoted + escaped) — shared with [[BodyTemplate]]. */
-  private[engine] def jsonString(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 2)
-    appendJsonString(sb, s)
-    sb.toString
   }
 
   /** Exponential backoff from 1 s, doubling, capped at 10 min total —

@@ -1,11 +1,12 @@
 package graft.engine
 
+import graft.JsonString
 import graft.config._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType, TimestampType}
 
@@ -155,12 +156,7 @@ object Output {
     * commit, so payload and directory layout both match. */
   private val ShadowPrefix = "__p_"
 
-  def writeModel(spark: SparkSession, cfg: GenerationConfig, model: ModelConfig, df0: DataFrame): Unit = {
-    val written = model.partitionColumns.filter(_.writeToOutput).map(_.name)
-    val df = written.foldLeft(df0)((acc, n) =>
-      acc.withColumn(s"$ShadowPrefix$n", org.apache.spark.sql.functions.col(n)))
-    val partitionCols = model.partitionColumns.map(pc =>
-      if (pc.writeToOutput) s"$ShadowPrefix${pc.name}" else pc.name)
+  def writeModel(spark: SparkSession, cfg: GenerationConfig, model: ModelConfig, df: DataFrame): Unit =
     cfg.output match {
       case _: DevNullOutput =>
         df.write.format("noop").mode(SaveMode.Overwrite).save()
@@ -174,8 +170,7 @@ object Output {
         val key = "spark.sql.parquet.outputTimestampType"
         val prev = spark.conf.getOption(key)
         spark.conf.set(key, if (o.timestampUnit == "ms") "TIMESTAMP_MILLIS" else "TIMESTAMP_MICROS")
-        try commitFiles(spark, cfg, model, partitionCols,
-          df.write.format("parquet").options(parquetOptions(o, model)))
+        try commitFiles(spark, cfg, model, df, "parquet", parquetOptions(o, model))
         finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
 
       case o: CsvOutput =>
@@ -194,27 +189,33 @@ object Output {
         val pattern =
           if (o.datetimeFormat.nonEmpty && o.datetimeFormat != "unix") Map("timestampFormat" -> o.datetimeFormat)
           else Map.empty[String, String]
-        commitFiles(spark, cfg, model, partitionCols, formatted.write.format("csv")
-          .option("header", !o.withoutHeaders).option("sep", o.delimiter).options(pattern))
+        commitFiles(spark, cfg, model, formatted, "csv",
+          Map("header" -> (!o.withoutHeaders).toString, "sep" -> o.delimiter) ++ pattern)
 
       case o: JsonlOutput =>
         // newline-delimited JSON: Spark's json writer is already one object
         // per line, splittable per partition — the natural corpus layout.
         // ignoreNullFields=false by default so every line carries the full
         // schema (downstream readers need not infer across files).
-        commitFiles(spark, cfg, model, partitionCols, df.write.format("json")
-          .option("compression", o.compression).option("ignoreNullFields", o.ignoreNullFields))
+        commitFiles(spark, cfg, model, df, "json",
+          Map("compression" -> o.compression, "ignoreNullFields" -> o.ignoreNullFields.toString))
     }
-  }
 
-  /** The one commit every file sink shares: file rotation, append, hive
+  /** The one commit every file sink shares: shadow columns for
+    * `write_to_output` partition columns, file rotation, append, hive
     * partition routing, then the post-commit partition-dir rename and the
-    * model's checkpoint. */
+    * model's checkpoint. The shadows exist only here, so the devnull and
+    * http sinks never see them. */
   private def commitFiles(
       spark: SparkSession, cfg: GenerationConfig, model: ModelConfig,
-      partitionCols: Seq[String], writer: DataFrameWriter[Row]): Unit = {
+      df: DataFrame, format: String, options: Map[String, String]): Unit = {
     val path = modelPath(cfg, model)
-    val w = writer.option("maxRecordsPerFile", model.rowsPerFile).mode(SaveMode.Append)
+    val shadowed = model.partitionColumns.filter(_.writeToOutput).foldLeft(df)((acc, pc) =>
+      acc.withColumn(s"$ShadowPrefix${pc.name}", col(pc.name)))
+    val partitionCols = model.partitionColumns.map(pc =>
+      if (pc.writeToOutput) s"$ShadowPrefix${pc.name}" else pc.name)
+    val w = shadowed.write.format(format).options(options)
+      .option("maxRecordsPerFile", model.rowsPerFile).mode(SaveMode.Append)
     (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).save(path)
     renameShadowPartitionDirs(spark, path)
     writeCheckpoint(spark, cfg, model)
@@ -414,7 +415,7 @@ object Output {
       .map { case (_, m) =>
         Seq(m.name, m.rowsCount, m.rowsPerFile, m.modelDir,
           m.columns.mkString("[", ",", "]"),
-          m.partitionColumns.mkString("[", ",", "]")).mkString(" ")
+          m.partitionColumns.mkString("[", ",", "]")).mkString("\u0000")
       }
       .mkString(s"seed=${cfg.randomSeed};", "|", "")
     val d = java.security.MessageDigest.getInstance("SHA-1")
@@ -427,7 +428,7 @@ object Output {
   def writeBackup(spark: SparkSession, cfg: GenerationConfig): Unit = {
     if (!hasMetaDir(cfg)) return
     val models = cfg.models.toSeq.sortBy(_._1).map { case (n, m) =>
-      s""""$n":{"rows_count":${m.rowsCount},"rows_per_file":${m.rowsPerFile},"columns":${m.columns.size}}"""
+      s"""${JsonString(n)}:{"rows_count":${m.rowsCount},"rows_per_file":${m.rowsPerFile},"columns":${m.columns.size}}"""
     }.mkString("{", ",", "}")
     val (fs, p) = fileSystem(spark, s"${cfg.output.dir}/backup.json")
     writeStringAtomic(fs, p,

@@ -1,5 +1,6 @@
 package graft.server
 
+import graft.JsonString
 import graft.config.ConfigParser
 import graft.engine.Engine
 
@@ -99,11 +100,11 @@ object TaskServer {
                   onModelStart = m => spark.sparkContext.setJobGroup(
                     s"$id::$m", s"graft task $id model $m", interruptOnCancel = true),
                   onModelDone = m => task.completedModels.add(m))
-                task.message = counts.map { case (m, n) => s""""$m":$n""" }.mkString("{", ",", "}")
+                task.message = counts.map { case (m, n) => s"${JsonString(m)}:$n" }.mkString("{", ",", "}")
                 task.state = "done"
               } catch {
                 case e: Exception =>
-                  task.message = "\"" + esc(String.valueOf(e.getMessage)) + "\""
+                  task.message = JsonString(String.valueOf(e.getMessage))
                   task.state = "failed"
               } finally {
                 spark.sparkContext.clearJobGroup()
@@ -113,7 +114,7 @@ object TaskServer {
           respond(ex, 200, s"""{"task_id":"$id"}""")
         }
       } catch {
-        case e: Exception => respond(ex, 400, s"""{"error":"${esc(String.valueOf(e.getMessage))}"}""")
+        case e: Exception => respond(ex, 400, s"""{"error":${JsonString(String.valueOf(e.getMessage))}}""")
       }
     })
 
@@ -129,7 +130,7 @@ object TaskServer {
             if (t.state != "running" || t.completedModels.contains(m)) 100.0
             else Engine.groupProgress(spark, s"${t.id}::$m")
           val pcts = t.models.map(m => m -> modelPct(m))
-          val models = pcts.map { case (m, p) => f""""$m":$p%.1f""" }.mkString("{", ",", "}")
+          val models = pcts.map { case (m, p) => f"${JsonString(m)}:$p%.1f" }.mkString("{", ",", "}")
           val progress = if (pcts.isEmpty) 1.0 else pcts.map(_._2).sum / (100.0 * pcts.size)
           respond(ex, 200, f"""{"task_id":"${t.id}","state":"${t.state}","progress":$progress%.3f,"models":$models,"result":${
             if (t.message.isEmpty) "null" else t.message}}""")
@@ -145,23 +146,12 @@ object TaskServer {
         }
       } catch {
         case e: ConfigParser.ConfigException =>
-          val errs = e.errors.map(m => "\"" + esc(m) + "\"")
+          val errs = e.errors.map(JsonString(_))
           respond(ex, 400, s"""{"valid":false,"errors":[${errs.mkString(",")}]}""")
         case e: Exception =>
-          respond(ex, 400, s"""{"valid":false,"errors":["${esc(String.valueOf(e.getMessage))}"]}""")
+          respond(ex, 400, s"""{"valid":false,"errors":[${JsonString(String.valueOf(e.getMessage))}]}""")
       }
     })
-
-    // Full JSON string escaping (incl. \r, \t and all other control chars) —
-    // every handler's error path must use THIS, not ad-hoc replace chains: a
-    // control character in an exception message would otherwise emit invalid
-    // JSON.
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
 
     // DELIBERATE API DIFFERENCE from the reference server (handlers.go
     // returns the raw generated config document as the 200 body): this
@@ -178,7 +168,7 @@ object TaskServer {
           val format = Option(body.path("format").asText(null)).map(_.toLowerCase)
             .filter(_.nonEmpty).getOrElse("yaml")
           if (!Seq("json", "yaml", "yml").contains(format))
-            respond(ex, 400, s"""{"message":"Unsupported format","error":"format $format"}""")
+            respond(ex, 400, s"""{"message":"Unsupported format","error":${JsonString(s"format $format")}}""")
           else {
             def field(n: String): Option[String] =
               Option(body.path(n).asText(null)).filter(_.nonEmpty)
@@ -187,10 +177,10 @@ object TaskServer {
                 // deterministic DDL translator — strictly stronger than the
                 // reference's LLM round-trip for this mode (SURVEY §2.10)
                 val cfg = graft.config.ConfigAuthoring.fromDdl(spark, ddl)
-                respond(ex, 200, s"""{"config":"${esc(cfg)}","valid":true,"attempts":1}""")
+                respond(ex, 200, s"""{"config":${JsonString(cfg)},"valid":true,"attempts":1}""")
               case (None, Some(path), _) =>
                 val cfg = graft.config.ConfigAuthoring.fromSample(spark, path)
-                respond(ex, 200, s"""{"config":"${esc(cfg)}","valid":true,"attempts":1}""")
+                respond(ex, 200, s"""{"config":${JsonString(cfg)},"valid":true,"attempts":1}""")
               case (None, None, Some(desc0)) =>
                 chatApi match {
                   case None =>
@@ -199,7 +189,7 @@ object TaskServer {
                     try graft.config.ProseAuthoring.ping(api)
                     catch {
                       case e: Exception =>
-                        respond(ex, 503, s"""{"message":"OpenAI is not available","error":"${esc(String.valueOf(e.getMessage))}"}""")
+                        respond(ex, 503, s"""{"message":"OpenAI is not available","error":${JsonString(String.valueOf(e.getMessage))}}""")
                         throw Handled
                     }
                     // reference prepends the bolded description type
@@ -208,9 +198,9 @@ object TaskServer {
                     val r = graft.config.ProseAuthoring.tryGenerate(
                       api, if (format == "yml") "yaml" else format, desc)
                     val errs = r.lastError
-                      .map(e => s""","errors":["${esc(e)}"]""").getOrElse("")
+                      .map(e => s""","errors":[${JsonString(e)}]""").getOrElse("")
                     respond(ex, 200,
-                      s"""{"config":"${esc(r.content)}","valid":${r.valid},"attempts":${r.attempts}$errs}""")
+                      s"""{"config":${JsonString(r.content)},"valid":${r.valid},"attempts":${r.attempts}$errs}""")
                 }
               case _ =>
                 respond(ex, 400,
@@ -222,7 +212,7 @@ object TaskServer {
         case Handled => // response already sent
         case e: Exception =>
           respond(ex, 400,
-            s"""{"message":"Unable to generate config","error":"${esc(String.valueOf(e.getMessage))}"}""")
+            s"""{"message":"Unable to generate config","error":${JsonString(String.valueOf(e.getMessage))}}""")
       }
     })
 

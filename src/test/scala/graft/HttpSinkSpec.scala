@@ -58,6 +58,31 @@ class HttpSinkSpec extends SparkSuite {
     }
   }
 
+  test("http sink posts exactly the model's columns for write_to_output partition columns") {
+    withServer(() => 200) { (endpoint, bodies) =>
+      val cfg = ConfigParser.parseYaml(
+        s"""
+           |random_seed: 42
+           |output:
+           |  type: http
+           |  params: { endpoint: "$endpoint", batch_size: 50, format_template: '{{ json .Rows }}' }
+           |models:
+           |  users:
+           |    rows_count: 120
+           |    columns:
+           |      - { name: id, type: integer, type_params: { bit_width: 64, from: 0, to: 119 }, ordered: true, distinct_percentage: 1 }
+           |      - { name: grp, type: string, values: [a, b, c] }
+           |    partition_columns:
+           |      - { name: grp, write_to_output: true }
+           |""".stripMargin)
+      Engine.run(spark, cfg)
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val rows = bodies.asScala.toSeq.flatMap(b => mapper.readTree(b).elements().asScala)
+      assert(rows.size == 120)
+      rows.foreach(r => assert(r.fieldNames().asScala.toSeq == Seq("id", "grp"), r.toString))
+    }
+  }
+
   test("body template engine: paths, json/len, range/end, trimming, loud errors") {
     import graft.engine.{BodyTemplate, HttpSink}
     import org.apache.spark.sql.Row

@@ -165,4 +165,27 @@ class OutputSpec extends SparkSuite {
       .filter(n => n.endsWith(".tmp") || n.endsWith(".tmp.crc"))
     assert(leftovers.isEmpty, leftovers.toSeq)
   }
+
+  test("fingerprint of a fixed two-model config is stable, so older backups still resume") {
+    val cfg = ConfigParser.parseYaml(
+      """
+        |random_seed: 7
+        |output: { type: parquet, dir: /tmp/unused }
+        |models:
+        |  customers:
+        |    rows_count: 1000
+        |    rows_per_file: 250
+        |    columns:
+        |      - { name: id, type: integer, type_params: { bit_width: 64 }, ordered: true, distinct_percentage: 1 }
+        |      - { name: name, type: string, type_params: { logical_type: first_name } }
+        |  orders:
+        |    rows_count: 3000
+        |    columns:
+        |      - { name: customer_id, foreign_key: customers.id }
+        |      - { name: status, type: string, values: [new, paid, shipped] }
+        |    partition_columns:
+        |      - { name: status, write_to_output: true }
+        |""".stripMargin)
+    assert(Output.fingerprint(cfg) == "b6d1306827088902481e000cc5ca800f642d032f")
+  }
 }

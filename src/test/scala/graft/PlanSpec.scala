@@ -850,4 +850,25 @@ class PlanSpec extends SparkSuite {
     assert(!p.contains("Scan parquet"), p)
     assert(!p.contains("Join"), p)
   }
+
+  test("Probe writes the formatted plan and optimized tree, or times three samples") {
+    val dir = java.nio.file.Files.createTempDirectory("probe")
+    assert(graft.tools.Probe.run(spark, sfDir, Seq("q4_filter_pushdown", "no_such_query"),
+      Some(dir)) == Seq("no_such_query"))
+    val txt = new String(java.nio.file.Files.readAllBytes(dir.resolve("q4_filter_pushdown.txt")), "UTF-8")
+    assert(txt.contains("== Physical Plan =="), txt)
+    val optimized = txt.split("== Optimized Logical Plan ==\n")
+    assert(optimized.length == 2, txt)
+    assert(optimized(1).contains("Filter") && optimized(1).contains("Relation"), txt)
+
+    val out = new java.io.ByteArrayOutputStream()
+    val failed = Console.withOut(out) {
+      graft.tools.Probe.run(spark, sfDir, Seq("q4_filter_pushdown"), None)
+    }
+    assert(failed.isEmpty)
+    val line = out.toString("UTF-8").linesIterator.find(_.startsWith("PROBE ")).getOrElse(fail(out.toString))
+    val fields = line.trim.split("\\s+").toSeq
+    assert(fields(1) == "q4_filter_pushdown" && fields.size == 5, line)
+    fields.drop(2).foreach(t => assert(t.toDouble >= 0, line))
+  }
 }

@@ -41,4 +41,45 @@ class TaskServerSpec extends SparkSuite {
       assert(status.path("result").asText().contains("not\\a dir"), status)
     } finally handle.stop()
   }
+
+  test("/status, /generate-config and backup.json stay valid JSON for quotes in model names and formats") {
+    val handle = graft.server.TaskServer.start(spark, 0)
+    val base = s"http://localhost:${handle.port}"
+    val client = java.net.http.HttpClient.newHttpClient()
+    val mapper = new ObjectMapper()
+    def post(path: String, body: String): String =
+      client.send(java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + path))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString()).body()
+    def parse(body: String) = try mapper.readTree(body) catch {
+      case e: com.fasterxml.jackson.core.JsonProcessingException => fail(s"invalid JSON: $body", e)
+    }
+    try {
+      val model = "m\"1\\"
+      val cfg = mapper.createObjectNode()
+      cfg.put("random_seed", 7)
+      val dir = java.nio.file.Files.createTempDirectory("quotedmodel")
+      cfg.putObject("output").put("type", "devnull").put("dir", dir.toString)
+      cfg.putObject("models").putObject(model).put("rows_count", 10)
+        .putArray("columns").addObject().put("name", "id").put("type", "uuid")
+      val id = parse(post("/generate", mapper.writeValueAsString(cfg))).path("task_id").asText()
+      assert(id.nonEmpty)
+      var status = mapper.createObjectNode(): com.fasterxml.jackson.databind.JsonNode
+      val deadline = System.currentTimeMillis() + 60000
+      while (status.path("state").asText("running") == "running" && System.currentTimeMillis() < deadline) {
+        Thread.sleep(50)
+        status = parse(client.send(java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"$base/status/$id")).GET().build(),
+          java.net.http.HttpResponse.BodyHandlers.ofString()).body())
+        assert(status.path("models").has(model), status)
+      }
+      assert(status.path("state").asText() == "done", status)
+      assert(status.path("result").path(model).asLong() == 10, status)
+      val backup = parse(new String(java.nio.file.Files.readAllBytes(dir.resolve("backup.json")), "UTF-8"))
+      assert(backup.path("models").has(model), backup)
+
+      val bad = parse(post("/generate-config", """{"format":"x\"y","sql_query":"CREATE TABLE t (a INT)"}"""))
+      assert(bad.path("error").asText() == "format x\"y", bad)
+    } finally handle.stop()
+  }
 }
