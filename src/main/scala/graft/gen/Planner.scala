@@ -4,6 +4,7 @@ import graft.config._
 import graft.rng.{Permutation, Rng}
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions._
@@ -39,7 +40,8 @@ object Planner {
       ordered: Boolean,
       orderSeed: Long,
       nullPercentage: Double,
-      cfg: RangeConfig)
+      cfg: RangeConfig,
+      stringSpec: Option[Values.StringSpec]) // resolved domain of a string range
 
   final case class ColumnPlan(
       name: String,
@@ -130,9 +132,9 @@ object Planner {
           java.time.Instant.EPOCH.plus(
             Values.datetimeMicros(p.fromSec, p.fromNanos, p.toSec, p.toNanos, number, total),
             java.time.temporal.ChronoUnit.MICROS)
-        } else if (r.cfg.stringParams.isDefined) {
-          Values.stringValue(number, stringKey(r.cfg.stringParams.get, total))
-        } else Values.uuidString(number, total)
+        } else if (r.stringSpec.isDefined) {
+          Values.stringValue(number, r.stringSpec.get)
+        } else Values.uuidStringU(number, total).toString
     }
 
     private def valueExpr(r: RangePlan, number: Column): Column = r.cfg.values match {
@@ -165,9 +167,8 @@ object Planner {
           timestamp_micros(invokeLong(
             "datetimeMicros",
             lit(p.fromSec), lit(p.fromNanos), lit(p.toSec), lit(p.toNanos), number, total))
-        } else if (r.cfg.stringParams.isDefined) {
-          val key = stringKey(r.cfg.stringParams.get, r.distinct.toDouble)
-          invokeString("stringValueU", number, lit(key))
+        } else if (r.stringSpec.isDefined) {
+          invokeString("stringValueU", number, reference(r.stringSpec.get))
         } else {
           invokeString("uuidStringU", number, total)
         }
@@ -183,8 +184,6 @@ object Planner {
   // ------------------------------------------------ StaticInvoke plumbing
 
   private val valuesClass = Values.getClass
-  private val rngClass = Rng.getClass
-  private val permClass = Permutation.getClass
 
   private def staticCall(cls: Class[_], dt: DataType, fn: String, args: Seq[Column]): Column =
     Bridge.column(StaticInvoke(
@@ -198,20 +197,19 @@ object Planner {
   private def invokeString(fn: String, args: Column*): Column =
     staticCall(valuesClass, StringType, fn, args)
 
+  /** `v` as a codegen reference object, not an inlined literal: the
+    * generated source does not depend on it, so a new seed or string spec
+    * reuses the compiled classes. */
+  private def reference(v: AnyRef): Column = Bridge.column(Literal(v, ObjectType(v.getClass)))
+
   /** Feistel permutation of a column within [0, n) — the shuffle-free stand-in
     * for the reference's LFSR sequencer (`generator/utils.go:105-167`). */
   def permuteCol(i: Column, seed: Long, n: Long): Column =
-    staticCall(permClass, LongType, "permute", Seq(i, lit(seed), lit(n)))
+    staticCall(valuesClass, LongType, "permute", Seq(i, reference(new Values.Seed(seed)), lit(n)))
 
   /** Stateless hash draw in [0,1) — fastRandomFloat (`generator/utils.go:169-196`). */
   def randomDoubleCol(seed: Long, n: Column): Column =
-    staticCall(rngClass, DoubleType, "randomDouble", Seq(lit(seed), n))
-
-  private def stringKey(p: StringParams, total: Double): String =
-    Values.specKey(
-      p.locale, p.minLength, p.maxLength, p.logicalType, p.template,
-      p.withoutLargeLetters, p.withoutSmallLetters, p.withoutNumbers, p.withoutSpecialChars,
-      total)
+    staticCall(valuesClass, DoubleType, "randomDouble", Seq(reference(new Values.Seed(seed)), n))
 
   // ------------------------------------------------------------- planning
 
@@ -240,7 +238,8 @@ object Planner {
     case other => throw new IllegalArgumentException(s"unsupported type $other")
   }
 
-  /** Domain size of one range (`Generator.ValuesCount()` per type). */
+  /** Domain size of one range (`Generator.ValuesCount()` per type); a string
+    * range's comes from its [[Values.StringSpec]]. */
   def valuesCount(typ: String, r: RangeConfig): Double = r.values match {
     case Some(vs) => vs.size.toDouble
     case None =>
@@ -251,12 +250,6 @@ object Planner {
           val p = r.dateTimeParams.get
           Values.datetimeValuesCount(p.fromSec, p.fromNanos, p.toSec, p.toNanos)
         case "uuid" => Values.uuidValuesCount
-        case "string" =>
-          val p = r.stringParams.get
-          Values.spec(Values.specKey(
-            p.locale, p.minLength, p.maxLength, p.logicalType, p.template,
-            p.withoutLargeLetters, p.withoutSmallLetters, p.withoutNumbers, p.withoutSpecialChars,
-            1.0)).valuesCount
         case other => throw new IllegalArgumentException(s"unsupported type $other")
       }
   }
@@ -297,7 +290,10 @@ object Planner {
           s"impossible to generate ${r.distinctCount} distinct values in $distinct rows")
         distinct = r.distinctCount
       }
-      val domain = valuesCount(dataColumn.typ, r)
+      // a string spec's domain size does not depend on its total: the spec
+      // built before the clamp is the plan's own unless the clamp bites
+      val domain = r.stringParams.fold(valuesCount(dataColumn.typ, r))(
+        Values.StringSpec(_, distinct.toDouble).valuesCount)
       if (distinct.toDouble > domain) {
         require(
           r.distinctPercentage == 0 && r.distinctCount == 0,
@@ -315,7 +311,8 @@ object Planner {
       val factor = if (domain.isInfinity) 1.0 else 1.0 - distinct.toDouble / domain
       val plan = RangePlan(
         spanOffset, spanOffset + spanRows, math.max(1L, spanRows), distinct,
-        math.max(0.0, factor), ordered, orderSeed, r.nullPercentage, r)
+        math.max(0.0, factor), ordered, orderSeed, r.nullPercentage, r,
+        r.stringParams.map(Values.StringSpec(_, distinct.toDouble)))
       spanOffset += spanRows
       plan
     }

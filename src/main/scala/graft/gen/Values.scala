@@ -1,6 +1,10 @@
 package graft.gen
 
+import graft.config.StringParams
 import graft.locale.{LocaleBundle, Locales}
+import graft.rng.{Permutation, Rng}
+
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.concurrent.ConcurrentHashMap
 
@@ -13,14 +17,37 @@ import java.util.concurrent.ConcurrentHashMap
   * what makes uniqueness, ordering and foreign keys composable with zero state
   * and zero shuffle (SURVEY §4).
   *
-  * All methods are static (object-level) with primitive-or-String signatures
-  * so whole-stage codegen can call them directly via `StaticInvoke`. String
-  * generators need precomputed tables derived purely from their config; those
-  * are cached executor-locally in a ConcurrentHashMap keyed by a canonical
-  * spec string — a deterministic derivation, so identical on every executor
-  * of any cluster (no broadcast, no driver state).
+  * All methods are static (object-level) so whole-stage codegen can call them
+  * directly via `StaticInvoke`. Numeric, datetime and uuid kernels take
+  * primitives. Seeds ([[Seed]]) and the string kernel's resolved
+  * [[StringSpec]] reach the kernels as codegen reference objects: the
+  * generated source is the same for every seed and spec, so a new seed
+  * compiles no new class, and each row reads the spec's tables with no
+  * lookup. Specs are interned per JVM by their parameters and serialize as
+  * those parameters only, so every executor derives the tables once,
+  * deterministically, from the config (no broadcast, no driver state).
   */
 object Values {
+
+  // ---------------------------------------------------------------- seeds
+
+  /** A seed as the kernels receive it. Its hash is the same for every seed:
+    * Spark orders common subexpressions of equal height by hash, so a
+    * seed-dependent hash would reorder them, and change the generated
+    * source, from one seed to the next. */
+  final class Seed(val value: Long) extends Serializable {
+    override def equals(o: Any): Boolean = o match {
+      case s: Seed => s.value == value
+      case _ => false
+    }
+    override def hashCode: Int = 0
+    override def toString: String = value.toString
+  }
+
+  // the seeded kernels of graft.rng, as generated code calls them
+  def permute(i: Long, seed: Seed, n: Long): Long = Permutation.permute(i, seed.value, n)
+
+  def randomDouble(seed: Seed, n: Long): Double = Rng.randomDouble(seed.value, n)
 
   // ------------------------------------------------------------- numerics
 
@@ -88,63 +115,28 @@ object Values {
     (intPos.toInt, next)
   }
 
-  /** n-th v4-shaped UUID: 16 bytes peeled from the fraction n/total, version
-    * and variant bits forced (reference `value/uuid.go:28-48`). Canonical text
-    * form — both reference writers serialize UUID as string. */
-  def uuidString(number: Double, total: Double): String = {
-    val bytes = new Array[Int](16)
-    var index = number / total
-    var i = 0
-    while (i < 16) {
-      // inlined orderedPosStep(255, index) — no tuple allocation on this path
-      val floatPos = 255.0 * index
-      val intPos = math.floor(floatPos)
-      bytes(i) = intPos.toInt
-      index = floatPos - intPos
-      if (index < 0) index = 0
-      i += 1
-    }
-    bytes(6) = (bytes(6) & 0x0f) | 0x40
-    bytes(8) = (bytes(8) & 0x3f) | 0x80
-    val sb = new java.lang.StringBuilder(36)
-    var j = 0
-    while (j < 16) {
-      if (j == 4 || j == 6 || j == 8 || j == 10) sb.append('-')
-      val b = bytes(j)
-      sb.append(Character.forDigit((b >> 4) & 0xf, 16))
-      sb.append(Character.forDigit(b & 0xf, 16))
-      j += 1
-    }
-    sb.toString
-  }
-
   def uuidValuesCount: Double = math.pow(2.0, 118.0) // `value/uuid.go:46-48`
 
   // -------------------------------------------------------------- strings
-  //
-  // Spec key format (canonical, produced by the planner):
-  //   locale|minLen|maxLen|logicalType|template|flags(4 chars of 0/1)|total
-  // The cached tables are derived purely from this key.
 
-  final case class StringSpec(
-      locale: LocaleBundle,
-      minLength: Int,
-      maxLength: Int,
-      logicalType: String,
-      template: String,
-      withoutLarge: Boolean,
-      withoutSmall: Boolean,
-      withoutNumbers: Boolean,
-      withoutSpecial: Boolean,
-      total: Double) {
+  /** The resolved domain of one string range: its config, its domain size
+    * `total`, and every table derived from them. Built once per range by the
+    * planner, through [[StringSpec.apply]], which returns the JVM's one
+    * instance per (params, total). */
+  final class StringSpec private (val params: StringParams, val total: Double) extends Serializable {
+    val locale: LocaleBundle = Locales(params.locale)
+    val minLength: Int = params.minLength
+    val maxLength: Int = params.maxLength
+    val logicalType: String = params.logicalType
+    val template: String = params.template
 
     /** Sorted charset per the exclusion flags (reference `string.go:65-88`). */
     val charset: Array[Char] = {
       val buf = new scala.collection.mutable.ArrayBuffer[Char]()
-      if (!withoutLarge) buf ++= locale.largeLetters
-      if (!withoutSmall) buf ++= locale.smallLetters
-      if (!withoutNumbers) buf ++= Locales.Numbers
-      if (!withoutSpecial) buf ++= Locales.SpecialChars
+      if (!params.withoutLargeLetters) buf ++= locale.largeLetters
+      if (!params.withoutSmallLetters) buf ++= locale.smallLetters
+      if (!params.withoutNumbers) buf ++= Locales.Numbers
+      if (!params.withoutSpecialChars) buf ++= Locales.SpecialChars
       buf.toArray.sorted
     }
 
@@ -223,9 +215,8 @@ object Values {
       * re-weighting 93% of gen_text's cost. Partial sums are monotone and
       * bounded by completions(r) ≤ Long.MaxValue, so no overflow.
       * Size: (completions.length) × (W+1) longs ≈ 6 MB at text's 64-char
-      * bench shape. @transient lazy: rebuilt once per JVM instead of
-      * shipping with every task closure. */
-    @transient lazy val rankTable: Array[Long] = {
+      * bench shape; built on first use, once per JVM (the spec is interned). */
+    lazy val rankTable: Array[Long] = {
       val words = locale.words
       val w1 = words.length + 1
       val rows = completions.length
@@ -266,34 +257,30 @@ object Values {
           (minLength to maxLength).map(l => math.pow(charset.length.toDouble, l.toDouble)).sum
       }
     }
+
+    /** Serialized as its parameters only: a task never ships the locale
+      * corpus or the tables, and resolves to the executor's instance. */
+    private def writeReplace(): AnyRef = SpecRef(params, total)
+
+    override def toString: String = s"StringSpec($params, $total)"
   }
 
-  private val specCache = new ConcurrentHashMap[String, StringSpec]()
+  object StringSpec {
+    private val interned = new ConcurrentHashMap[SpecRef, StringSpec]()
 
-  def specKey(
-      locale: String, minLen: Int, maxLen: Int, logical: String, template: String,
-      woLarge: Boolean, woSmall: Boolean, woNumbers: Boolean, woSpecial: Boolean,
-      total: Double): String = {
-    val flags = Seq(woLarge, woSmall, woNumbers, woSpecial).map(b => if (b) '1' else '0').mkString
-    s"$locale|$minLen|$maxLen|$logical|$template|$flags|$total"
+    /** The JVM's one spec for `params` over a domain of `total` values. */
+    def apply(params: StringParams, total: Double): StringSpec =
+      interned.computeIfAbsent(SpecRef(params, total), r => new StringSpec(r.params, r.total))
   }
 
-  def spec(key: String): StringSpec = {
-    val cached = specCache.get(key)
-    if (cached != null) return cached
-    specCache.computeIfAbsent(key, k => {
-      val Array(locale, minS, maxS, logical, template, flags, totalS) = k.split("\\|", -1)
-      StringSpec(
-        Locales(locale), minS.toInt, maxS.toInt, logical, template,
-        flags(0) == '1', flags(1) == '1', flags(2) == '1', flags(3) == '1',
-        totalS.toDouble)
-    })
+  /** The serialized form of a [[StringSpec]]. */
+  private final case class SpecRef(params: StringParams, total: Double) {
+    private def readResolve(): AnyRef = StringSpec(params, total)
   }
 
-  /** n-th string of the domain described by `key` — dispatcher mirroring
-    * reference `string.go:412-430`. Called per row from codegen. */
-  def stringValue(number: Double, key: String): String = {
-    val s = spec(key)
+  /** n-th string of the domain described by `s` — dispatcher mirroring
+    * reference `string.go:412-430`. */
+  def stringValue(number: Double, s: StringSpec): String =
     if (s.template.nonEmpty) templateString(s, number)
     else s.logicalType match {
       case "first_name" => nthOf(s.firstNames, number, s.total)
@@ -302,7 +289,6 @@ object Values {
       case "text" => text(s, number)
       case _ => simpleString(s, number)
     }
-  }
 
   @inline private def nthOf(arr: Array[String], number: Double, total: Double): String =
     arr(orderedLong(0, (arr.length - 1).toLong, number, total).toInt)
@@ -446,40 +432,21 @@ object Values {
     res
   }
 
-  def stringValuesCount(key: String): Double = spec(key).valuesCount
-
   // --------------------------------------------- codegen-facing wrappers
   // StaticInvoke calls run on Catalyst-internal types: StringType values are
   // UTF8String on both argument and return positions.
 
-  private val specCacheU =
-    new ConcurrentHashMap[org.apache.spark.unsafe.types.UTF8String, StringSpec]()
-
-  def stringValueU(
-      number: Double, key: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
-    var s = specCacheU.get(key)
-    if (s == null) {
-      s = spec(key.toString)
-      specCacheU.putIfAbsent(key.clone(), s)
-    }
-    val out =
-      if (s.template.nonEmpty) templateString(s, number)
-      else s.logicalType match {
-        case "first_name" => nthOf(s.firstNames, number, s.total)
-        case "last_name" => nthOf(s.lastNames, number, s.total)
-        case "phone" => phone(s, number)
-        case "text" => text(s, number)
-        case _ => simpleString(s, number)
-      }
-    org.apache.spark.unsafe.types.UTF8String.fromString(out)
-  }
+  /** The string kernel called per row from generated code. */
+  def stringValueU(number: Double, s: StringSpec): UTF8String =
+    UTF8String.fromString(stringValue(number, s))
 
   private val HexDigits = "0123456789abcdef".getBytes("US-ASCII")
 
-  /** uuid as UTF8String built byte-level (canonical text is pure ASCII, so
-    * the UTF-16 String + re-encode round-trip is skipped on the hot path).
-    * Same value as [[uuidString]]. */
-  def uuidStringU(number: Double, total: Double): org.apache.spark.unsafe.types.UTF8String = {
+  /** n-th v4-shaped UUID: 16 bytes peeled from the fraction n/total, version
+    * and variant bits forced (reference `value/uuid.go:28-48`), in canonical
+    * text form — both reference writers serialize UUID as string. Built
+    * byte-level: the text is pure ASCII. */
+  def uuidStringU(number: Double, total: Double): UTF8String = {
     val out = new Array[Byte](36)
     var index = number / total
     var i = 0
@@ -498,6 +465,6 @@ object Values {
       pos += 2
       i += 1
     }
-    org.apache.spark.unsafe.types.UTF8String.fromBytes(out)
+    UTF8String.fromBytes(out)
   }
 }

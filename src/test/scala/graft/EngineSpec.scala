@@ -172,8 +172,8 @@ class EngineSpec extends SparkSuite {
       if (res.length > wantedLen) res.substring(0, wantedLen) else res
     }
     for (locale <- Seq("en", "ru"); (min, max) <- Seq((3, 5), (32, 64), (200, 256))) {
-      val s = gen.Values.spec(gen.Values.specKey(
-        locale, min, max, "text", "", false, false, false, false, 1e9))
+      val s = gen.Values.StringSpec(
+        config.StringParams(min, max, locale, "text", "", false, false, false, false), 1e9)
       val rnd = new scala.util.Random(7)
       val nums = (0 until 500).map(_ => rnd.nextDouble() * 1e9) ++ Seq(0.0, 1.0, 999999999.0)
       nums.foreach { n =>
