@@ -113,7 +113,7 @@ final case class JsonlOutput(
     ignoreNullFields: Boolean)
     extends OutputConfig { val typ = "jsonl" }
 final case class HttpOutput(
-    dir: String, // unused; kept for config-shape parity
+    dir: String, // where Output.writeBackup writes backup.json; no data is written here
     endpoint: String,
     batchSize: Long,
     workersCount: Int,

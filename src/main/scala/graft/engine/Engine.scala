@@ -32,11 +32,6 @@ object Engine {
     base.select(plans.map(_.expr(col("id"))): _*)
   }
 
-  /** All model frames of the config (ignored models skipped — reference
-    * `task.go:197-202`). */
-  def frames(spark: SparkSession, cfg: GenerationConfig): Seq[(ModelConfig, DataFrame)] =
-    cfg.activeModels.map(m => m -> modelFrame(spark, cfg, m))
-
   /** The same model as a rate-limited LIVE STREAM (SURVEY §2.8's declared
     * extension): the identical column expressions applied to the rate
     * source's monotonically increasing `value`, wrapped modulo `rows_count`

@@ -4,14 +4,15 @@ import graft.config._
 import graft.rng.{Permutation, Rng}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.{KnownNullable, Literal}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Compiles a validated column config into ONE deterministic Catalyst
-  * expression of the absolute row id.
+/** Compiles a validated column config into ONE deterministic function of the
+  * absolute row id, and the Catalyst expression that calls it.
   *
   * This is the Spark-first replacement for the reference's generator wiring
   * (`usecase/general/task.go:83-114` + `generator/generator.go:30-243`): where
@@ -20,13 +21,18 @@ import org.apache.spark.sql.types._
   * random access at any row (so `generate_from` slicing is free, unlike the
   * reference's O(n) SkipRows — SURVEY §7).
   *
-  * Per column:
+  * Per column, in [[ColumnPlan]]'s kernel:
   *   idc  = id mod cycle
-  *   top  = Feistel(idc; dataColumnSeed, cycle)          - range routing
-  *   k    = idc (single range) | top - spanStart (multi) - in-range position
+  *   top  = idc (single range) | Feistel(idc; dataColumnSeed, cycle)  - range routing
+  *   k    = top - spanStart                               - in-range position
   *   num  = ordered ? floor(k*distinct/spanRows) : Feistel(k mod distinct)
-  *   number = num + hash(seed+num)*jitterFactor          - value spreading
+  *   number = num + hash(seed+num)*jitterFactor           - value spreading
   *   value  = domainFn(number, distinct)  [NULL if hash(seed+num) < nullPct]
+  *
+  * The projection is one `StaticInvoke` of that kernel per column, with the
+  * plan as its only codegen reference object: the generated source depends
+  * on the column's type and nullability only, so a new seed, bound,
+  * percentage, enum list or string spec reuses the compiled classes.
   */
 object Planner {
 
@@ -40,8 +46,35 @@ object Planner {
       ordered: Boolean,
       orderSeed: Long,
       nullPercentage: Double,
+      float32: Boolean, // float values rounded to 32 bits, even in a 64-bit column
       cfg: RangeConfig,
-      stringSpec: Option[Values.StringSpec]) // resolved domain of a string range
+      stringSpec: Option[Values.StringSpec]) { // resolved domain of a string range
+
+    // the domain as the per-row kernel reads it, resolved once
+    private[Planner] val total: Double = distinct.toDouble
+    private[Planner] val int: IntParams = cfg.intParams.orNull
+    private[Planner] val float: FloatParams = cfg.floatParams.orNull
+    private[Planner] val time: DateTimeParams = cfg.dateTimeParams.orNull
+    private[Planner] val spec: Values.StringSpec = stringSpec.orNull
+
+    /** Enum literals as the kernel returns them (boxed Catalyst values:
+      * Long, Double, timestamp micros as Long, UTF8String; null stays
+      * null); null for a range without `values`. */
+    private[Planner] val enumValues: Array[AnyRef] = cfg.values.map(_.map {
+      case null => null
+      case i: java.time.Instant => java.lang.Long.valueOf(DateTimeUtils.instantToMicros(i))
+      case s: String => UTF8String.fromString(s)
+      case x => x.asInstanceOf[AnyRef]
+    }.toArray).orNull
+    private[Planner] val hasNullValue: Boolean = enumValues != null && enumValues.contains(null)
+    private val rowsPerValue: Double =
+      if (enumValues == null) 1.0 else math.max(1L, math.ceil(total / enumValues.length).toLong).toDouble
+
+    /** Position of `number` in the enum list: the n-th sorted literal, each
+      * repeated ceil(total/len) times (reference `value/enum.go:19-42`). */
+    private[Planner] def enumIndex(number: Double): Int =
+      math.min(math.floor(math.floor(number).toLong / rowsPerValue).toInt, enumValues.length - 1)
+  }
 
   final case class ColumnPlan(
       name: String,
@@ -51,187 +84,161 @@ object Planner {
       dataColumnSeed: Long, // seed of the (FK-resolved) data column
       ranges: Seq[RangePlan]) {
 
-    /** The generation expression over the absolute row-id column. */
+    private[this] val rangeArray: Array[RangePlan] = ranges.toArray
+
+    /** The generation expression over the absolute row-id column: one call
+      * of this plan's kernel, narrowed to the column's type. */
     def expr(id: Column): Column = {
-      val idc = if (cycle > 0) id % lit(cycle) else id
-      val single = ranges.size == 1
-      val top = permuteCol(idc, dataColumnSeed, cycle)
-
-      def rangeExpr(r: RangePlan): Column = {
-        val k = if (single) idc else top - lit(r.spanStart)
-        val num: Column =
-          if (r.ordered) {
-            // floor(k * distinct / spanRows) in double math, exactly the
-            // ordered sequencer (`generator/utils.go:92-103`)
-            (k.cast(DoubleType) * lit(r.distinct.toDouble) / lit(r.spanRows.toDouble)).cast(LongType)
-          } else {
-            val kMod = if (r.spanRows > r.distinct) k % lit(r.distinct) else k
-            permuteCol(kMod, r.orderSeed, r.distinct)
-          }
-        val draw = randomDoubleCol(dataColumnSeed, num)
-        val number: Column =
-          if (r.jitterFactor > 0) num.cast(DoubleType) + draw * lit(r.jitterFactor)
-          else num.cast(DoubleType)
-        val value = valueExpr(r, number)
-        if (r.nullPercentage > 0)
-          when(draw < lit(r.nullPercentage), lit(null).cast(dataType)).otherwise(value)
-        else value
+      val (kernel, kernelType) = dataType match {
+        case StringType => ("stringAt", StringType)
+        case FloatType | DoubleType => (if (nullable) "nullableDoubleAt" else "doubleAt", DoubleType)
+        case TimestampType => (if (nullable) "nullableLongAt" else "longAt", TimestampType)
+        case _ => (if (nullable) "nullableLongAt" else "longAt", LongType)
       }
+      val call = StaticInvoke(
+        Planner.getClass, kernelType, kernel,
+        Seq(Literal(this, ObjectType(getClass)), Bridge.expression(id)),
+        returnNullable = nullable)
+      // declared nullable whatever the plan: written parquet columns stay
+      // `optional`, as they have always been
+      val col = Bridge.column(KnownNullable(call))
+      (if (kernelType == dataType) col else col.cast(dataType)).as(name)
+    }
 
-      val col =
-        if (single) rangeExpr(ranges.head)
-        else {
-          // CASE WHEN chain on the routing number; spans are contiguous
-          val woLast = ranges.dropRight(1)
-          woLast.foldRight(rangeExpr(ranges.last)) { (r, acc) =>
-            when(top < lit(r.spanEnd), rangeExpr(r)).otherwise(acc)
-          }
-        }
-      col.as(name)
+    // ------------------------------------------------- the per-row kernel
+    // Typed entry points for generated code (through Planner's statics), all
+    // over the same steps: routing number, range, value number, domain.
+
+    def longAt(id: Long): Long = { val t = top(id); val r = rangeOf(t); long(r, number(r, t)) }
+
+    def doubleAt(id: Long): Double = { val t = top(id); val r = rangeOf(t); double(r, number(r, t)) }
+
+    def nullableLongAt(id: Long): java.lang.Long = {
+      val t = top(id)
+      val r = rangeOf(t)
+      val n = number(r, t)
+      if (n.isNaN) null else long(r, n)
+    }
+
+    def nullableDoubleAt(id: Long): java.lang.Double = {
+      val t = top(id)
+      val r = rangeOf(t)
+      val n = number(r, t)
+      if (n.isNaN) null else double(r, n)
+    }
+
+    def stringAt(id: Long): UTF8String = {
+      val t = top(id)
+      val r = rangeOf(t)
+      val n = number(r, t)
+      if (n.isNaN) null else string(r, n)
     }
 
     /** n-th value of the column's domain for driver-side use (FK oracles,
-      * tests). Mirrors expr() in plain Scala. */
+      * tests), boxed: Byte/Short/Int/Long by the range's bit width,
+      * Float/Double, Instant, String, and enum literals as parsed. */
     def valueAt(id: Long): Any = {
-      val idc = if (cycle > 0) ((id % cycle) + cycle) % cycle else id
-      val top = Permutation.permute(idc, dataColumnSeed, cycle)
-      val r =
-        if (ranges.size == 1) ranges.head
-        else ranges.find(rp => top >= rp.spanStart && top < rp.spanEnd).getOrElse(ranges.last)
-      val k = if (ranges.size == 1) idc else top - r.spanStart
-      val num =
-        if (r.ordered) (k.toDouble * r.distinct.toDouble / r.spanRows.toDouble).toLong
-        else Permutation.permute(if (r.spanRows > r.distinct) k % r.distinct else k, r.orderSeed, r.distinct)
-      val draw = Rng.randomDouble(dataColumnSeed, num)
-      if (r.nullPercentage > 0 && draw < r.nullPercentage) return null
-      val number = num.toDouble + (if (r.jitterFactor > 0) draw * r.jitterFactor else 0.0)
-      scalarValue(r, number)
-    }
-
-    private def scalarValue(r: RangePlan, number: Double): Any = r.cfg.values match {
-      case Some(vs) =>
-        val rowsPerValue = math.max(1L, math.ceil(r.distinct.toDouble / vs.size).toLong)
-        vs((math.floor(number).toLong / rowsPerValue).toInt.min(vs.size - 1))
-      case None =>
-        val total = r.distinct.toDouble
-        if (r.cfg.intParams.isDefined) {
-          val p = r.cfg.intParams.get
-          val v = Values.orderedLong(p.from, p.to, number, total)
-          p.bitWidth match {
-            case 8 => v.toByte
-            case 16 => v.toShort
-            case 32 => v.toInt
-            case _ => v
-          }
-        } else if (r.cfg.floatParams.isDefined) {
-          val p = r.cfg.floatParams.get
-          val v = Values.orderedDouble(p.from, p.to, number, total)
-          if (p.bitWidth == 32) v.toFloat else v
-        } else if (r.cfg.dateTimeParams.isDefined) {
-          val p = r.cfg.dateTimeParams.get
-          java.time.Instant.EPOCH.plus(
-            Values.datetimeMicros(p.fromSec, p.fromNanos, p.toSec, p.toNanos, number, total),
-            java.time.temporal.ChronoUnit.MICROS)
-        } else if (r.stringSpec.isDefined) {
-          Values.stringValue(number, r.stringSpec.get)
-        } else Values.uuidStringU(number, total).toString
-    }
-
-    private def valueExpr(r: RangePlan, number: Column): Column = r.cfg.values match {
-      case Some(vs) =>
-        // n-th sorted literal, each repeated ceil(total/len) times
-        // (reference `value/enum.go:19-42`)
-        val rowsPerValue = math.max(1L, math.ceil(r.distinct.toDouble / vs.size).toLong)
-        val idx = least(
-          floor(floor(number) / lit(rowsPerValue.toDouble)).cast(IntegerType),
-          lit(vs.size - 1))
-        val arr = array(vs.map(enumLit): _*)
-        get(arr, idx)
-      case None =>
-        val total = lit(r.distinct.toDouble)
-        if (r.cfg.intParams.isDefined) {
-          val p = r.cfg.intParams.get
-          val v = invokeLong("orderedLong", lit(p.from), lit(p.to), number, total)
-          p.bitWidth match {
-            case 8 => v.cast(ByteType)
-            case 16 => v.cast(ShortType)
-            case 32 => v.cast(IntegerType)
-            case _ => v
-          }
-        } else if (r.cfg.floatParams.isDefined) {
-          val p = r.cfg.floatParams.get
-          val v = invokeDouble("orderedDouble", lit(p.from), lit(p.to), number, total)
-          if (p.bitWidth == 32) v.cast(FloatType) else v
-        } else if (r.cfg.dateTimeParams.isDefined) {
-          val p = r.cfg.dateTimeParams.get
-          timestamp_micros(invokeLong(
-            "datetimeMicros",
-            lit(p.fromSec), lit(p.fromNanos), lit(p.toSec), lit(p.toNanos), number, total))
-        } else if (r.stringSpec.isDefined) {
-          invokeString("stringValueU", number, reference(r.stringSpec.get))
-        } else {
-          invokeString("uuidStringU", number, total)
+      val t = top(id)
+      val r = rangeOf(t)
+      val n = number(r, t)
+      if (n.isNaN) null
+      else if (r.enumValues != null) r.cfg.values.get(r.enumIndex(n))
+      else if (r.int != null) {
+        val v = long(r, n)
+        r.int.bitWidth match {
+          case 8 => v.toByte
+          case 16 => v.toShort
+          case 32 => v.toInt
+          case _ => v
         }
+      } else if (r.float != null) {
+        val v = double(r, n)
+        if (r.float32) v.toFloat else v
+      } else if (r.time != null) {
+        java.time.Instant.EPOCH.plus(long(r, n), java.time.temporal.ChronoUnit.MICROS)
+      } else string(r, n).toString
     }
 
-    private def enumLit(v: Any): Column = v match {
-      case null => lit(null).cast(dataType)
-      case i: java.time.Instant => lit(i).cast(dataType)
-      case x => lit(x).cast(dataType)
+    /** Routing number of row `id`: its place in the cycle, permuted across
+      * the cycle when ranges split it. */
+    private def top(id: Long): Long = {
+      val idc = if (cycle > 0) id % cycle else id
+      if (rangeArray.length == 1) idc else Permutation.permute(idc, dataColumnSeed, cycle)
     }
+
+    /** The range of routing number `top`: the first whose span ends above
+      * it, else the last (spans are contiguous). */
+    private def rangeOf(top: Long): RangePlan = {
+      var i = 0
+      while (i < rangeArray.length - 1 && top >= rangeArray(i).spanEnd) i += 1
+      rangeArray(i)
+    }
+
+    /** Jittered value number of routing number `top` in `r`; NaN where the
+      * row is null (a null draw or an enum's null literal). */
+    private def number(r: RangePlan, top: Long): Double = {
+      val k = top - r.spanStart
+      val num =
+        if (r.ordered) {
+          // floor(k * distinct / spanRows) in double math, exactly the
+          // ordered sequencer (`generator/utils.go:92-103`)
+          (k.toDouble * r.total / r.spanRows.toDouble).toLong
+        } else Permutation.permute(if (r.spanRows > r.distinct) k % r.distinct else k, r.orderSeed, r.distinct)
+      val jittered =
+        if (r.jitterFactor == 0 && r.nullPercentage == 0) num.toDouble
+        else {
+          // stateless hash draw in [0,1): fastRandomFloat (`generator/utils.go:169-196`)
+          val draw = Rng.randomDouble(dataColumnSeed, num)
+          if (draw < r.nullPercentage) Double.NaN else num.toDouble + draw * r.jitterFactor
+        }
+      if (r.hasNullValue && !jittered.isNaN && r.enumValues(r.enumIndex(jittered)) == null) Double.NaN
+      else jittered
+    }
+
+    private def long(r: RangePlan, number: Double): Long =
+      if (r.enumValues != null) r.enumValues(r.enumIndex(number)).asInstanceOf[java.lang.Long]
+      else if (r.int != null) Values.orderedLong(r.int.from, r.int.to, number, r.total)
+      else Values.datetimeMicros(
+        r.time.fromSec, r.time.fromNanos, r.time.toSec, r.time.toNanos, number, r.total)
+
+    private def double(r: RangePlan, number: Double): Double = {
+      val v =
+        if (r.enumValues != null) r.enumValues(r.enumIndex(number)).asInstanceOf[java.lang.Double].doubleValue
+        else Values.orderedDouble(r.float.from, r.float.to, number, r.total)
+      if (r.float32) v.toFloat.toDouble else v
+    }
+
+    private def string(r: RangePlan, number: Double): UTF8String =
+      if (r.enumValues != null) r.enumValues(r.enumIndex(number)).asInstanceOf[UTF8String]
+      else if (r.spec != null) UTF8String.fromString(Values.stringValue(number, r.spec))
+      else Values.uuidStringU(number, r.total)
   }
 
-  // ------------------------------------------------ StaticInvoke plumbing
-
-  private val valuesClass = Values.getClass
-
-  private def staticCall(cls: Class[_], dt: DataType, fn: String, args: Seq[Column]): Column =
-    Bridge.column(StaticInvoke(
-      cls, dt, fn, args.map(Bridge.expression),
-      inputTypes = Nil, propagateNull = true, returnNullable = false, isDeterministic = true))
-
-  private def invokeLong(fn: String, args: Column*): Column =
-    staticCall(valuesClass, LongType, fn, args)
-  private def invokeDouble(fn: String, args: Column*): Column =
-    staticCall(valuesClass, DoubleType, fn, args)
-  private def invokeString(fn: String, args: Column*): Column =
-    staticCall(valuesClass, StringType, fn, args)
-
-  /** `v` as a codegen reference object, not an inlined literal: the
-    * generated source does not depend on it, so a new seed or string spec
-    * reuses the compiled classes. */
-  private def reference(v: AnyRef): Column = Bridge.column(Literal(v, ObjectType(v.getClass)))
-
-  /** Feistel permutation of a column within [0, n) — the shuffle-free stand-in
-    * for the reference's LFSR sequencer (`generator/utils.go:105-167`). */
-  def permuteCol(i: Column, seed: Long, n: Long): Column =
-    staticCall(valuesClass, LongType, "permute", Seq(i, reference(new Values.Seed(seed)), lit(n)))
-
-  /** Stateless hash draw in [0,1) — fastRandomFloat (`generator/utils.go:169-196`). */
-  def randomDoubleCol(seed: Long, n: Column): Column =
-    staticCall(valuesClass, DoubleType, "randomDouble", Seq(reference(new Values.Seed(seed)), n))
+  // the kernel's static entry points, as `StaticInvoke` calls them
+  def longAt(p: ColumnPlan, id: Long): Long = p.longAt(id)
+  def doubleAt(p: ColumnPlan, id: Long): Double = p.doubleAt(id)
+  def nullableLongAt(p: ColumnPlan, id: Long): java.lang.Long = p.nullableLongAt(id)
+  def nullableDoubleAt(p: ColumnPlan, id: Long): java.lang.Double = p.nullableDoubleAt(id)
+  def stringAt(p: ColumnPlan, id: Long): UTF8String = p.stringAt(id)
 
   // ------------------------------------------------------------- planning
 
   /** Spark type of a (non-FK) column config (reference parquet schema mapping
-    * `writer/parquet/parquet.go:134-139` + §1.2 of SURVEY). */
+    * `writer/parquet/parquet.go:134-139` + §1.2 of SURVEY): the widest type
+    * among its ranges. */
   def sparkType(c: ColumnConfig): DataType = c.typ match {
     case "integer" =>
-      val bw = c.ranges.flatMap(_.intParams).map(_.bitWidth).headOption.getOrElse {
-        // enum-only integer column: widest literal wins (reference coerces to
-        // the declared bit width; default 64 keeps all literals representable)
-        64
-      }
-      bw match {
+      // the widest declared bit width; an enum-only column is 64-bit (the
+      // reference coerces to the declared width; 64 keeps every literal)
+      c.ranges.flatMap(_.intParams).map(_.bitWidth).maxOption.getOrElse(64) match {
         case 8 => ByteType
         case 16 => ShortType
         case 32 => IntegerType
         case _ => LongType
       }
     case "float" =>
-      if (c.ranges.flatMap(_.floatParams).map(_.bitWidth).headOption.contains(32)) FloatType
-      else if (c.ranges.exists(_.floatParams.isDefined)) DoubleType
-      else DoubleType
+      val widths = c.ranges.flatMap(_.floatParams).map(_.bitWidth)
+      if (widths.nonEmpty && widths.forall(_ == 32)) FloatType else DoubleType
     case "string" => StringType
     case "uuid" => StringType
     case "datetime" => TimestampType
@@ -278,6 +285,8 @@ object Planner {
       if (column.foreignKey.nonEmpty && !column.foreignKeyOrder) model.rowsCount
       else dataModel.rowsCount
 
+    // a float enum's literals take the width of the column's first float range
+    val enumFloat32 = dataColumn.ranges.flatMap(_.floatParams).headOption.exists(_.bitWidth == 32)
     var spanOffset = 0L
     val rangePlans = dataColumn.ranges.map { r =>
       val spanRows = math.ceil(cycle.toDouble * r.rangePercentage).toLong
@@ -311,7 +320,8 @@ object Planner {
       val factor = if (domain.isInfinity) 1.0 else 1.0 - distinct.toDouble / domain
       val plan = RangePlan(
         spanOffset, spanOffset + spanRows, math.max(1L, spanRows), distinct,
-        math.max(0.0, factor), ordered, orderSeed, r.nullPercentage, r,
+        math.max(0.0, factor), ordered, orderSeed, r.nullPercentage,
+        r.floatParams.fold(enumFloat32)(_.bitWidth == 32), r,
         r.stringParams.map(Values.StringSpec(_, distinct.toDouble)))
       spanOffset += spanRows
       plan

@@ -2,7 +2,6 @@ package graft.gen
 
 import graft.config.StringParams
 import graft.locale.{LocaleBundle, Locales}
-import graft.rng.{Permutation, Rng}
 
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,37 +16,17 @@ import java.util.concurrent.ConcurrentHashMap
   * what makes uniqueness, ordering and foreign keys composable with zero state
   * and zero shuffle (SURVEY §4).
   *
-  * All methods are static (object-level) so whole-stage codegen can call them
-  * directly via `StaticInvoke`. Numeric, datetime and uuid kernels take
-  * primitives. Seeds ([[Seed]]) and the string kernel's resolved
-  * [[StringSpec]] reach the kernels as codegen reference objects: the
-  * generated source is the same for every seed and spec, so a new seed
-  * compiles no new class, and each row reads the spec's tables with no
+  * All methods are static (object-level) pure functions of primitives and,
+  * for strings, the range's resolved [[StringSpec]]. The per-row kernel of
+  * `Planner.ColumnPlan` calls them; generated code calls that kernel once
+  * per column, with the plan (holding seeds, bounds and specs) as its only
+  * codegen reference object, so the generated source is the same for every
+  * seed, bound and spec, and each row reads the spec's tables with no
   * lookup. Specs are interned per JVM by their parameters and serialize as
   * those parameters only, so every executor derives the tables once,
   * deterministically, from the config (no broadcast, no driver state).
   */
 object Values {
-
-  // ---------------------------------------------------------------- seeds
-
-  /** A seed as the kernels receive it. Its hash is the same for every seed:
-    * Spark orders common subexpressions of equal height by hash, so a
-    * seed-dependent hash would reorder them, and change the generated
-    * source, from one seed to the next. */
-  final class Seed(val value: Long) extends Serializable {
-    override def equals(o: Any): Boolean = o match {
-      case s: Seed => s.value == value
-      case _ => false
-    }
-    override def hashCode: Int = 0
-    override def toString: String = value.toString
-  }
-
-  // the seeded kernels of graft.rng, as generated code calls them
-  def permute(i: Long, seed: Seed, n: Long): Long = Permutation.permute(i, seed.value, n)
-
-  def randomDouble(seed: Seed, n: Long): Double = Rng.randomDouble(seed.value, n)
 
   // ------------------------------------------------------------- numerics
 
@@ -432,13 +411,7 @@ object Values {
     res
   }
 
-  // --------------------------------------------- codegen-facing wrappers
-  // StaticInvoke calls run on Catalyst-internal types: StringType values are
-  // UTF8String on both argument and return positions.
-
-  /** The string kernel called per row from generated code. */
-  def stringValueU(number: Double, s: StringSpec): UTF8String =
-    UTF8String.fromString(stringValue(number, s))
+  // ------------------------------------------------------------ uuid text
 
   private val HexDigits = "0123456789abcdef".getBytes("US-ASCII")
 

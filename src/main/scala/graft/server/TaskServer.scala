@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.UUID
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 /** Async HTTP task API, mirroring the reference server surface
@@ -46,16 +47,28 @@ object TaskServer {
     val completedModels = ConcurrentHashMap.newKeySet[String]()
   }
 
-  final class Handle(server: HttpServer) {
+  final class Handle(server: HttpServer, taskPool: ExecutorService, httpPool: ExecutorService) {
     def join(): Unit = Thread.currentThread().join()
-    def stop(): Unit = server.stop(0)
+    /** Stops the listener, then lets the task and HTTP pools finish what
+      * they hold and end their threads. */
+    def stop(): Unit = {
+      server.stop(0)
+      taskPool.shutdown()
+      httpPool.shutdown()
+    }
     def port: Int = server.getAddress.getPort
+  }
+
+  /** A fixed pool of `size` threads named `<prefix>-<n>`. */
+  private def namedPool(size: Int, prefix: String): ExecutorService = {
+    val count = new AtomicInteger
+    Executors.newFixedThreadPool(size, (r: Runnable) => new Thread(r, s"$prefix-${count.incrementAndGet()}"))
   }
 
   def start(spark: SparkSession, port: Int,
       chatApi: Option[graft.config.ProseAuthoring.ChatApi] = None): Handle = {
     val tasks = new ConcurrentHashMap[String, Task]()
-    val pool = Executors.newFixedThreadPool(4)
+    val pool = namedPool(4, "task-server-run")
     val server = HttpServer.create(new InetSocketAddress(port), 0)
 
     def respond(ex: HttpExchange, code: Int, body: String): Unit = {
@@ -216,8 +229,9 @@ object TaskServer {
       }
     })
 
-    server.setExecutor(Executors.newFixedThreadPool(8))
+    val http = namedPool(8, "task-server-http")
+    server.setExecutor(http)
     server.start()
-    new Handle(server)
+    new Handle(server, pool, http)
   }
 }

@@ -393,8 +393,10 @@ class EngineSpec extends SparkSuite {
          |      - { name: user_id, foreign_key: user.id }
          |""".stripMargin
     val cfg = ConfigParser.parseYaml(yaml)
-    val run1 = Engine.frames(spark, cfg).map { case (m, df) => m.name -> df.collect().toSeq }
-    val run2 = Engine.frames(spark, cfg).map { case (m, df) => m.name -> df.collect().toSeq }
+    val run1 = cfg.activeModels.map(m => m -> Engine.modelFrame(spark, cfg, m))
+      .map { case (m, df) => m.name -> df.collect().toSeq }
+    val run2 = cfg.activeModels.map(m => m -> Engine.modelFrame(spark, cfg, m))
+      .map { case (m, df) => m.name -> df.collect().toSeq }
     assert(run1 == run2)
     val userIds = run1.find(_._1 == "user").get._2.map(_.get(0)).toSet
     val tokenUserIds = run2.find(_._1 == "token").get._2.map(_.get(1)).filter(_ != null)

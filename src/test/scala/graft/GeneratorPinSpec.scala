@@ -158,6 +158,35 @@ class GeneratorPinSpec extends SparkSuite {
     assert(run(12L) == 0L)
   }
 
+  test("changing bounds, percentages, enum literals and string lengths reuses the compiled code") {
+    // Same column types and nullability in both jobs, every other column
+    // parameter different. The row count stays: Spark writes the range's
+    // start and size into the generated source.
+    def run(second: Boolean): Long = {
+      def pick(first: Any, other: Any): Any = if (second) other else first
+      val yaml =
+        s"""
+           |random_seed: 7
+           |output: $devnull
+           |models:
+           |  bounds:
+           |    rows_count: 400
+           |    columns:
+           |      - { name: i, type: integer, type_params: { from: ${pick(0, -70)}, to: ${pick(99, 5000)} }, null_percentage: ${pick(0.1, 0.4)} }
+           |      - { name: f, type: float, type_params: { bit_width: 64, from: ${pick(-1.5, 10)}, to: ${pick(2.5, 1000000)} }, distinct_percentage: ${pick(0.5, 0.9)} }
+           |      - { name: t, type: datetime, type_params: { from: "${pick("2001-02-03T04:05:06Z", "1999-12-31T23:59:59.5Z")}", to: "${pick("2030-01-01T00:00:00Z", "2001-01-01T00:00:00Z")}" } }
+           |      - { name: s, type: string, type_params: { min_length: ${pick(3, 6)}, max_length: ${pick(12, 40)} } }
+           |      - { name: e, type: string, values: [${pick("a, null, b", "x, y, null, z")}] }
+           |      - { name: n, type: integer, values: [${pick("1, 2", "-5, 70, 9")}] }
+           |""".stripMargin
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Engine.run(spark, ConfigParser.parseYaml(yaml))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    run(second = false)
+    assert(run(second = true) == 0L)
+  }
+
   test("ColumnPlan.valueAt matches the generated frame for every column") {
     val cfg = ConfigParser.parseYaml(yaml(devnull))
     cfg.activeModels.foreach { m =>

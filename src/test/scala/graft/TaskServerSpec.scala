@@ -2,7 +2,10 @@ package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-/** Task-server response bodies stay valid JSON whatever text an error carries. */
+import scala.jdk.CollectionConverters._
+
+/** Task-server response bodies stay valid JSON whatever text an error
+  * carries, and a stopped server leaves no thread behind. */
 class TaskServerSpec extends SparkSuite {
 
   test("/status of a task that failed with a backslash in its message is valid JSON") {
@@ -81,5 +84,39 @@ class TaskServerSpec extends SparkSuite {
       val bad = parse(post("/generate-config", """{"format":"x\"y","sql_query":"CREATE TABLE t (a INT)"}"""))
       assert(bad.path("error").asText() == "format x\"y", bad)
     } finally handle.stop()
+  }
+
+  test("stop() ends the server's task and HTTP threads") {
+    val prefixes = Seq("task-server-run-", "task-server-http-")
+    def serverThreads(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(t => t.isAlive && prefixes.exists(t.getName.startsWith))
+    val before = serverThreads()
+    val handle = graft.server.TaskServer.start(spark, 0)
+    val base = s"http://localhost:${handle.port}"
+    val client = java.net.http.HttpClient.newHttpClient()
+    val mapper = new ObjectMapper()
+    def send(req: java.net.http.HttpRequest.Builder): com.fasterxml.jackson.databind.JsonNode =
+      mapper.readTree(client.send(req.build(), java.net.http.HttpResponse.BodyHandlers.ofString()).body())
+    val started =
+      try {
+        val body = s"""{"random_seed":7,"output":{"type":"devnull","dir":"${java.nio.file.Files.createTempDirectory("stopthreads")}"},""" +
+          """"models":{"m":{"rows_count":10,"columns":[{"name":"id","type":"uuid"}]}}}"""
+        val id = send(java.net.http.HttpRequest.newBuilder(java.net.URI.create(s"$base/generate"))
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))).path("task_id").asText()
+        assert(id.nonEmpty)
+        var state = "running"
+        val deadline = System.currentTimeMillis() + 60000
+        while (state == "running" && System.currentTimeMillis() < deadline) {
+          Thread.sleep(50)
+          state = send(java.net.http.HttpRequest.newBuilder(java.net.URI.create(s"$base/status/$id")).GET())
+            .path("state").asText("running")
+        }
+        assert(state == "done")
+        serverThreads() -- before
+      } finally handle.stop()
+    prefixes.foreach(p => assert(started.exists(_.getName.startsWith(p)), s"no $p thread ran the task"))
+    val deadline = System.currentTimeMillis() + 5000
+    while (started.exists(_.isAlive) && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(!started.exists(_.isAlive), s"alive after stop(): ${started.filter(_.isAlive).map(_.getName)}")
   }
 }
