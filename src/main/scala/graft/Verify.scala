@@ -69,9 +69,9 @@ object Verify {
     val bad = failed.result()
     println(s"[verify] produced $produced of ${selected.size} queries" +
       (if (bad.nonEmpty) s"; FAILED: ${bad.mkString(", ")}" else ""))
-    // machine-readable trailer for the driver's tail capture (r17 verdict
-    // #2a — CORRECTNESS_r14..r17 landed empty driver-side): one SHORT JSON
-    // line, always last on stdout
+    // machine-readable trailer for a caller that keeps only the tail of
+    // stdout (a long last line used to be cut there): one SHORT JSON line,
+    // always last on stdout
     println(s"""{"verify_produced":$produced,"verify_total":${selected.size},"failed":[${
       bad.map(JsonString(_)).mkString(",")}]}""")
     if (bad.nonEmpty) sys.exit(1)

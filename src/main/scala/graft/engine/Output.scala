@@ -5,12 +5,14 @@ import graft.config._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType, TimestampType}
 
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, StandardCopyOption}
 
 /** Sinks: csv / parquet / devnull / http, partitioned-write routing, conflict
   * pre-flight, backup + checkpoint metadata.
@@ -34,49 +36,53 @@ object Output {
   // / backup / preflight behave identically for file://, hdfs:// and s3a://
   // output dirs — a 100 TB job writes to a distributed store, not the
   // driver's local disk (reference keeps everything on one node; we don't).
+  // `file:` paths get [[NioLocalFs]], as the file sinks' writes do.
 
-  private def fileSystem(spark: SparkSession, path: String): (FileSystem, HPath) = {
+  private def fileSystem(spark: SparkSession, path: String): (FileSystem, HPath) =
+    fileSystem(spark.sparkContext.hadoopConfiguration, path)
+
+  private def fileSystem(conf: Configuration, path: String): (FileSystem, HPath) = {
     val p = new HPath(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    val scheme = Option(p.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+    (if (scheme == "file") NioLocalFs(conf) else p.getFileSystem(conf), p)
   }
 
-  /** Write small metadata atomically: temp file + rename-with-OVERWRITE. A
-    * reader never observes a half-written checkpoint, and — unlike a
-    * delete-then-rename — there is no window where NO checkpoint exists (a
-    * driver crash there would make a later resume treat the dir as
-    * uncommitted and wipe it). `FileContext.rename(OVERWRITE)` is atomic on
-    * HDFS and local file://; on object stores (s3a) rename is copy+delete and
-    * this remains best-effort — the documented caveat of metadata-on-object-
-    * store layouts.
+  /** Write small metadata atomically: a uniquely named temp file next to
+    * the target, then one rename that replaces the target. A reader, in
+    * this JVM or another, sees the old content or the new one, never a
+    * half-written file, and there is no window where NO checkpoint exists
+    * (a driver crash there would make a later resume treat the dir as
+    * uncommitted and wipe it). Concurrent jobs may share one dir
+    * (task-server requests all write its `backup.json`); the last rename
+    * wins.
     *
-    * Concurrent jobs may share one dir (task-server requests all write its
-    * `backup.json`), so every write gets its own temp name, and renames onto
-    * one target are serialized within the JVM: on the local filesystem an
-    * OVERWRITE rename is delete-then-rename for the file and again for its
-    * `.crc`, and two interleaved ones fail or pair one file with the other's
-    * checksum. */
+    * On `file:` the rename is `Files.move(ATOMIC_MOVE)`, which is rename(2)
+    * and replaces the target in one step, across processes too. Other
+    * schemes use `FileContext.rename(OVERWRITE)`: atomic on HDFS, and on
+    * object stores (s3a) a copy + delete that stays best-effort, the
+    * documented caveat of metadata-on-object-store layouts. A scheme with
+    * no `FileContext` binding falls back to delete-then-rename. */
   private def writeStringAtomic(fs: FileSystem, target: HPath, content: String): Unit = {
     fs.mkdirs(target.getParent)
-    val qTarget = fs.makeQualified(target)
-    val tmp = fs.makeQualified(
-      new HPath(target.getParent, s".${target.getName}.${java.util.UUID.randomUUID()}.tmp"))
+    val tmp = new HPath(target.getParent, s".${target.getName}.${java.util.UUID.randomUUID()}.tmp")
     val out = fs.create(tmp, true)
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    renameLocks(Math.floorMod(qTarget.hashCode, renameLocks.length)).synchronized {
-      try {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
-        fc.rename(tmp, qTarget, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      } catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          // FS with no FileContext binding: fall back to the non-atomic form
-          if (fs.exists(qTarget)) fs.delete(qTarget, false)
-          fs.rename(tmp, qTarget)
-      }
+    fs match {
+      case local: NioLocalFs =>
+        Files.move(local.pathToFile(tmp).toPath, local.pathToFile(target).toPath, StandardCopyOption.ATOMIC_MOVE)
+      case _ =>
+        val (qTmp, qTarget) = (fs.makeQualified(tmp), fs.makeQualified(target))
+        try {
+          val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
+          fc.rename(qTmp, qTarget, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        } catch {
+          case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+            if (fs.exists(qTarget)) fs.delete(qTarget, false)
+            fs.rename(qTmp, qTarget)
+        }
     }
   }
-
-  private val renameLocks = Array.fill(64)(new Object)
 
   private def readString(fs: FileSystem, p: HPath): Option[String] =
     if (!fs.exists(p)) None
@@ -214,7 +220,7 @@ object Output {
       acc.withColumn(s"$ShadowPrefix${pc.name}", col(pc.name)))
     val partitionCols = model.partitionColumns.map(pc =>
       if (pc.writeToOutput) s"$ShadowPrefix${pc.name}" else pc.name)
-    val w = shadowed.write.format(format).options(options)
+    val w = shadowed.write.format(format).options(options).options(NioLocalFs.WriterOptions)
       .option("maxRecordsPerFile", model.rowsPerFile).mode(SaveMode.Append)
     (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).save(path)
     renameShadowPartitionDirs(spark, path)
@@ -261,8 +267,7 @@ object Output {
     * works on any supported filesystem (rename is O(1) on HDFS/local;
     * copy-based on object stores — a documented cost of write_to_output). */
   private def renameShadowPartitionDirs(spark: SparkSession, root: String): Unit = {
-    val hadoopPath = new org.apache.hadoop.fs.Path(root)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, hadoopPath) = fileSystem(spark, root)
     if (!fs.exists(hadoopPath)) return
     // A RESUME append re-creates the pre-rename dir while the renamed one
     // already exists; rename-onto-existing-dir is fs-dependent (fails, or
@@ -425,12 +430,17 @@ object Output {
   /** Config snapshot for resume comparison (reference `backup/backup.go:29-40`
     * writes the `backup:"true"` field subset; we snapshot a digest plus
     * human-readable summary of the resolved config). */
-  def writeBackup(spark: SparkSession, cfg: GenerationConfig): Unit = {
+  def writeBackup(spark: SparkSession, cfg: GenerationConfig): Unit =
+    writeBackup(spark.sparkContext.hadoopConfiguration, cfg)
+
+  /** [[writeBackup]] with the Hadoop conf alone: a `file:` output dir needs
+    * no Spark session for its metadata. */
+  def writeBackup(conf: Configuration, cfg: GenerationConfig): Unit = {
     if (!hasMetaDir(cfg)) return
     val models = cfg.models.toSeq.sortBy(_._1).map { case (n, m) =>
       s"""${JsonString(n)}:{"rows_count":${m.rowsCount},"rows_per_file":${m.rowsPerFile},"columns":${m.columns.size}}"""
     }.mkString("{", ",", "}")
-    val (fs, p) = fileSystem(spark, s"${cfg.output.dir}/backup.json")
+    val (fs, p) = fileSystem(conf, s"${cfg.output.dir}/backup.json")
     writeStringAtomic(fs, p,
       s"""{"fingerprint":"${fingerprint(cfg)}","random_seed":${cfg.randomSeed},"models":$models}""")
   }

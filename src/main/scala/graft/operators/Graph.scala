@@ -1085,7 +1085,7 @@ object Graph {
     // h-index rounds in the fixpoint session (r18): the score relation is
     // node-sized, no mid-loop action (the per-round window's input is the
     // edge-sized neighbor join, so this one is borderline — kept on the
-    // measured win, see OPTIMIZATION_r18.md)
+    // measured win of the round-18 optimisation notes, in git history)
     val fx = Fixpoint.session(edges.sparkSession)
     val adj = Fixpoint.lift(fx,
       und.select(col("a").as("w"), col("b").as("x"))

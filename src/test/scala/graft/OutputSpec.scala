@@ -1,14 +1,21 @@
 package graft
 
 import graft.config.ConfigParser
-import graft.engine.{Engine, Output}
+import graft.engine.{Engine, NioLocalFs, Output}
 
+import org.apache.hadoop.fs.{LocalFileSystem, Path => HPath}
+import org.apache.hadoop.fs.permission.FsPermission
+
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.PosixFilePermissions
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 import java.util.Locale
+import scala.jdk.CollectionConverters._
 
 /** File-sink pins: the csv writer options and value formatting, parquet's
-  * timestamp unit, and the backup metadata under concurrent jobs. */
+  * timestamp unit, the local file system's modes and sidecars, and the
+  * backup metadata under concurrent jobs and processes. */
 class OutputSpec extends SparkSuite {
 
   private def csvYaml(dir: String, params: String): String =
@@ -166,6 +173,105 @@ class OutputSpec extends SparkSuite {
     assert(leftovers.isEmpty, leftovers.toSeq)
   }
 
+  private def modeOf(p: Path): String = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+
+  test("NioLocalFs applies the given mode and is the class a writer's conf gets") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = NioLocalFs(conf)
+    val dir = Files.createTempDirectory("niolocal")
+    val file = dir.resolve("f")
+    Files.write(file, Array[Byte](1))
+    Seq("640" -> "rw-r-----", "755" -> "rwxr-xr-x", "600" -> "rw-------", "644" -> "rw-r--r--").foreach {
+      case (octal, symbolic) =>
+        fs.setPermission(new HPath(file.toString), new FsPermission(Integer.parseInt(octal, 8).toShort))
+        assert(modeOf(file) == symbolic, octal)
+    }
+    // create and mkdirs give the modes Hadoop computes from the conf's umask
+    val umask = FsPermission.getUMask(conf)
+    val out = fs.create(new HPath(dir.resolve("a/b/c").toString), true)
+    out.close()
+    assert(modeOf(dir.resolve("a/b/c")) == FsPermission.getFileDefault.applyUMask(umask).toString)
+    assert(modeOf(dir.resolve("a/b")) == FsPermission.getDirDefault.applyUMask(umask).toString)
+    assert(!Files.exists(dir.resolve("a/b/.c.crc")))
+    // link status: a plain file is no symlink, a symlink keeps its target
+    assert(!fs.getFileLinkStatus(new HPath(file.toString)).isSymlink)
+    val link = Files.createSymbolicLink(dir.resolve("link"), file)
+    assert(fs.getFileLinkStatus(new HPath(link.toString)).getSymlink.toUri.getPath == file.toString)
+    // the FileSystem cache already holds the checksummed default for file:,
+    // yet a conf with the writer options yields NioLocalFs
+    val p = new HPath(dir.toUri)
+    assert(p.getFileSystem(conf).isInstanceOf[LocalFileSystem])
+    val writerConf = spark.sessionState.newHadoopConfWithOptions(NioLocalFs.WriterOptions)
+    assert(p.getFileSystem(writerConf).getClass == classOf[NioLocalFs])
+  }
+
+  test("a partitioned parquet run leaves no .crc and Hadoop's modes, after an earlier file: access") {
+    val dir = Files.createTempDirectory("nocrc")
+    // touch file: through the session first, so the FileSystem cache holds
+    // the checksummed default before the write starts
+    spark.range(10).write.parquet(dir.resolve("earlier").toString)
+    assert(new HPath(dir.toUri).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .isInstanceOf[LocalFileSystem])
+    val meta = dir.resolve("out")
+    Engine.run(spark, ConfigParser.parseYaml(
+      s"""
+         |random_seed: 42
+         |output: { type: parquet, dir: $meta }
+         |models:
+         |  m:
+         |    rows_count: 300
+         |    rows_per_file: 40
+         |    checkpoint_rows: 150
+         |    columns:
+         |      - { name: id, type: integer, type_params: { bit_width: 64, from: 0, to: 299 }, ordered: true, distinct_percentage: 1 }
+         |      - { name: grp, type: string, values: [a, b, c] }
+         |    partition_columns:
+         |      - { name: grp, write_to_output: true }
+         |""".stripMargin))
+    assert(spark.read.parquet(meta.resolve("m").toString).count() == 300)
+    val walk = Files.walk(meta)
+    val all = try walk.iterator().asScala.toList finally walk.close()
+    val (dirs, files) = all.filter(_ != meta).partition(Files.isDirectory(_))
+    assert(files.exists(_.getFileName.toString.startsWith("part-")), files)
+    assert(files.exists(_.getFileName.toString == "backup.json"), files)
+    assert(files.exists(_.getFileName.toString == "m_checkpoint.json"), files)
+    assert(!files.exists(_.getFileName.toString.endsWith(".crc")), files)
+    assert(!files.exists(_.getFileName.toString.endsWith(".tmp")), files)
+    assert(dirs.map(d => meta.relativize(d).toString).sorted == Seq("m", "m/grp=a", "m/grp=b", "m/grp=c"))
+    files.foreach(f => assert(modeOf(f) == "rw-r--r--", f))
+    dirs.foreach(d => assert(modeOf(d) == "rwxr-xr-x", d))
+  }
+
+  test("backup.json stays whole while a second JVM writes it too") {
+    val dir = Files.createTempDirectory("backupjvm").toString
+    val mine = ConfigParser.parseYaml(OutputSpec.backupYaml(dir, 42))
+    val fingerprints = Set(Output.fingerprint(mine),
+      Output.fingerprint(ConfigParser.parseYaml(OutputSpec.backupYaml(dir, 43))))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val child = new ProcessBuilder(javaBin, "-cp", System.getProperty("java.class.path"),
+      "graft.BackupWriterMain", dir, "43", "300")
+      .redirectError(ProcessBuilder.Redirect.DISCARD).start()
+    val stdout = new java.io.BufferedReader(new java.io.InputStreamReader(child.getInputStream))
+    try {
+      assert(stdout.readLine() == "ready")
+      var writes = 0
+      while (child.isAlive || writes < 50) {
+        Output.writeBackup(spark, mine)
+        writes += 1
+        // a reader never sees a half-written file
+        val json = mapper.readTree(new java.io.File(s"$dir/backup.json"))
+        assert(fingerprints.contains(json.path("fingerprint").asText()), json)
+      }
+      assert(child.waitFor() == 0)
+      assert(stdout.readLine() == "done")
+    } finally child.destroyForcibly()
+    val json = mapper.readTree(new java.io.File(s"$dir/backup.json"))
+    assert(fingerprints.contains(json.path("fingerprint").asText()), json)
+    val leftovers = new java.io.File(dir).listFiles().map(_.getName).filter(_ != "backup.json")
+    assert(leftovers.isEmpty, leftovers.toSeq)
+  }
+
   test("fingerprint of a fixed two-model config is stable, so older backups still resume") {
     val cfg = ConfigParser.parseYaml(
       """
@@ -187,5 +293,35 @@ class OutputSpec extends SparkSuite {
         |      - { name: status, write_to_output: true }
         |""".stripMargin)
     assert(Output.fingerprint(cfg) == "b6d1306827088902481e000cc5ca800f642d032f")
+  }
+}
+
+object OutputSpec {
+  def backupYaml(dir: String, seed: Long): String =
+    s"""
+       |random_seed: $seed
+       |output: { type: devnull, dir: $dir }
+       |models:
+       |  m:
+       |    rows_count: 10
+       |    columns:
+       |      - { name: id, type: uuid }
+       |""".stripMargin
+}
+
+/** The second process of OutputSpec's cross-process backup test: writes
+  * `backup.json` under `<dir>` `<n>` times for `random_seed` `<seed>`,
+  * through the Hadoop conf alone (no Spark session). Prints `ready` after
+  * the first write and `done` after the last.
+  * Usage: BackupWriterMain <dir> <seed> <n> */
+object BackupWriterMain {
+  def main(args: Array[String]): Unit = {
+    val Array(dir, seed, n) = args
+    val cfg = ConfigParser.parseYaml(OutputSpec.backupYaml(dir, seed.toLong))
+    val conf = new org.apache.hadoop.conf.Configuration()
+    Output.writeBackup(conf, cfg)
+    println("ready")
+    (1 until n.toInt).foreach(_ => Output.writeBackup(conf, cfg))
+    println("done")
   }
 }
