@@ -300,6 +300,133 @@ object Kernels {
     best.toLong
   }
 
+  /** The duplicate-bigram gate's two counts from one scan of the UTF-8
+    * bytes, packed as `n_bigrams << 32 | n_distinct_bigrams`:
+    *  - `n_bigrams` = `greatest(size(split(trim(t), "\\s+")) - 1, 0)`: the
+    *    maximal `\s` runs left once Spark's `trim` (spaces only) ran;
+    *  - `n_distinct_bigrams` = `size(wordNgramsSorted(t, 2))`: distinct
+    *    adjacent token pairs of the Java-`trim`med text (which strips every
+    *    char <= ' '), tokens split on `\s` runs as [[wordNgramsSorted]] does.
+    * Every byte the two trims or the tokenizer look at is ASCII, and valid
+    * UTF-8 decodes one-to-one, so tokens compare as byte ranges (hash, then
+    * bytes) with no `String` per bigram. Invalid UTF-8, which `toString`
+    * maps many-to-one onto U+FFFD, takes its distinct count from
+    * [[wordNgramsSorted]] itself; its `\s` runs are unchanged by decoding. */
+  private def bigramCounts(text: UTF8String): Long = {
+    @inline def at(i: Int): Int = text.getByte(i) & 0xff
+    var a = 0
+    var b = text.numBytes
+    while (a < b && at(a) == ' ') a += 1
+    while (b > a && at(b - 1) == ' ') b -= 1
+    var c = a
+    var d = b
+    while (c < d && at(c) <= ' ') c += 1
+    while (d > c && at(d - 1) <= ' ') d -= 1
+    // tokens of [c, d): start, end and a polynomial hash of their bytes;
+    // tokens and the runs between them take a byte each at least
+    val cap = (d - c + 1) / 2
+    val starts = new Array[Int](cap)
+    val ends = new Array[Int](cap)
+    val hashes = new Array[Int](cap)
+    var m = 0
+    var runs = 0
+    var inWs = false
+    var valid = true
+    var cont = 0
+    var start = c
+    var h = 0
+    var i = a
+    while (i < b) {
+      val x = at(i)
+      if (x == ' ' || (x >= '\t' && x <= '\r')) {
+        if (!inWs) {
+          runs += 1
+          if (i > c && i < d) { starts(m) = start; ends(m) = i; hashes(m) = h; m += 1 }
+        }
+        inWs = true
+      } else if (i >= c && i < d) {
+        if (inWs || i == c) { start = i; h = 0 }
+        inWs = false
+        h = 31 * h + x
+        if (x >= 0x80 && valid) {
+          if (cont > 0) cont -= 1
+          else {
+            val k = utf8SeqLen(text, i, d)
+            if (k == 0) valid = false else cont = k - 1
+          }
+        }
+      } else inWs = false
+      i += 1
+    }
+    if (d > c) { starts(m) = start; ends(m) = d; hashes(m) = h; m += 1 }
+    val distinct =
+      if (!valid) wordNgramsSorted(text, 2).numElements()
+      else if (m < 2) 0
+      else {
+        // open addressing over pair indexes p (tokens p, p + 1), stored as p + 1
+        val mask = (Integer.highestOneBit(m - 1) << 2) - 1
+        val slots = new Array[Int](mask + 1)
+        def sameTok(p: Int, q: Int): Boolean = {
+          val n = ends(p) - starts(p)
+          n == ends(q) - starts(q) && hashes(p) == hashes(q) && {
+            var j = 0
+            while (j < n && text.getByte(starts(p) + j) == text.getByte(starts(q) + j)) j += 1
+            j == n
+          }
+        }
+        var n = 0
+        var p = 0
+        while (p < m - 1) {
+          var s = (hashes(p) * 0x9E3779B9 + hashes(p + 1)) * 0x85EBCA6B
+          s = (s ^ (s >>> 15)) & mask
+          while (slots(s) != 0 && !(sameTok(slots(s) - 1, p) && sameTok(slots(s), p + 1)))
+            s = (s + 1) & mask
+          if (slots(s) == 0) { slots(s) = p + 1; n += 1 }
+          p += 1
+        }
+        n
+      }
+    (runs.toLong << 32) | distinct
+  }
+
+  /** Length of the well-formed UTF-8 sequence that starts at byte `i` (lead
+    * byte >= 0x80) and ends before `end`, or 0 when it is malformed: the
+    * byte ranges of Unicode table 3-7, which are what Java's decoder
+    * accepts. */
+  private def utf8SeqLen(text: UTF8String, i: Int, end: Int): Int = {
+    @inline def at(j: Int): Int = if (j < end) text.getByte(j) & 0xff else -1
+    @inline def cont(j: Int): Boolean = (at(j) & 0xc0) == 0x80
+    val x = at(i)
+    val y = at(i + 1)
+    if (x < 0xc2 || x > 0xf4) 0
+    else if (x < 0xe0) if (cont(i + 1)) 2 else 0
+    else if (x < 0xf0) {
+      val lo = if (x == 0xe0) 0xa0 else 0x80
+      val hi = if (x == 0xed) 0x9f else 0xbf
+      if (y >= lo && y <= hi && cont(i + 2)) 3 else 0
+    } else {
+      val lo = if (x == 0xf0) 0x90 else 0x80
+      val hi = if (x == 0xf4) 0x8f else 0xbf
+      if (y >= lo && y <= hi && cont(i + 2) && cont(i + 3)) 4 else 0
+    }
+  }
+
+  /** `[n_bigrams, n_distinct_bigrams]` of a text (see [[bigramCounts]]):
+    * the integer core of `TextAnalysis.withRepetition` and `curationKeep`. */
+  def repetitionCounts(text: UTF8String): ArrayData = {
+    val p = bigramCounts(text)
+    new GenericArrayData(Array[Long](p >>> 32, p & 0xffffffffL))
+  }
+
+  /** The `filter_repetition` gate: keep a text whose duplicate-bigram share
+    * is at most `maxDupPermille`, as the integer test
+    * `(n − d)·1000 <= maxDupPermille·n` over [[bigramCounts]]. */
+  def repetitionKeep(text: UTF8String, maxDupPermille: Long): Boolean = {
+    val p = bigramCounts(text)
+    val n = p >>> 32
+    (n - (p & 0xffffffffL)) * 1000 <= maxDupPermille * n
+  }
+
   /** Content-defined chunking (the rsync/LBFS/FastCDC boundary rule): a cut
     * falls after every position whose trailing `w`-char window hashes to
     * 0 mod `div` under a polynomial hash mod 1e9+7. Boundaries depend only
@@ -932,6 +1059,12 @@ object Kernels {
 
   def maxNgramMultiplicityCol(text: Column, n: Int): Column =
     call(LongType, "maxNgramMultiplicity", text, lit(n))
+
+  def repetitionCountsCol(text: Column): Column =
+    call(ArrayType(LongType, containsNull = false), "repetitionCounts", text)
+
+  def repetitionKeepCol(text: Column, maxDupPermille: Long): Column =
+    call(BooleanType, "repetitionKeep", text, lit(maxDupPermille))
 
   def bpeSegmentCountCol(word: Column, merges: Column): Column =
     call(LongType, "bpeSegmentCount", word, merges)

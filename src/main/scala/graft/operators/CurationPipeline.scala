@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -28,9 +29,12 @@ import scala.jdk.CollectionConverters._
   *   - { op: split, train: 0.9, val: 0.05, test: 0.05 }
   * }}}
   *
-  * Every step is a deterministic narrow/one-shuffle transform; composition
-  * order is the config's order. Returns the curated frame with whatever
-  * columns the steps added (`split` adds the assignment column).
+  * Each step is a row filter or row map, or one shuffle per grouping step
+  * (`dedup_exact`, `cap_per_source`), so the pipeline reads each document
+  * once; `filter_lm`, `extract_html`, `filter_url` and `k_anonymity`
+  * aggregate or explode and join their result back. Composition order is
+  * the config's order. Returns the curated frame with whatever columns the
+  * steps added (`split` adds the assignment column).
   */
 object CurationPipeline {
 
@@ -40,6 +44,9 @@ object CurationPipeline {
       extends RuntimeException(errors.mkString("; "))
 
   private val yaml = new ObjectMapper(new YAMLFactory())
+
+  /** `dedup_exact`'s transient rank column. */
+  private val DedupRank = "dedup_rank"
 
   private val Known: Map[String, Set[String]] = Map(
     "normalize" -> Set.empty,
@@ -131,7 +138,13 @@ object CurationPipeline {
     steps
   }
 
-  /** Compile and run the parsed steps over (idCol, textCol) documents. */
+  /** Compile and run the parsed steps over (idCol, textCol) documents.
+    *
+    * The id contract: the per-document steps decide each row on its own
+    * text, so rows that share an id are kept or dropped one by one, and a
+    * null id is a row like any other. `dedup_exact` keeps, per normalized
+    * text, the row with the smallest id (a null id last), ties broken by
+    * the text itself. */
   def run(docs: DataFrame, idCol: String, textCol: String, steps: Seq[Step]): DataFrame =
     steps.foldLeft(docs) { (df, s) =>
       s.op match {
@@ -143,23 +156,19 @@ object CurationPipeline {
           df.filter(graft.functions.TextFns.langId(col(textCol))
             .isin(keep.map(x => x: Any): _*))
         case "filter_quality" =>
-          val min = s.params("min_score").asDouble()
-          val scored = TextAnalysis.withQuality(df, idCol, textCol)
-            .select(col(idCol), col("quality_score"))
-          df.join(scored.filter(col("quality_score") >= min).drop("quality_score"),
-            Seq(idCol), "left_semi")
+          df.filter(TextAnalysis.qualityScoreOf(col(textCol)) >= s.params("min_score").asDouble())
         case "filter_length" =>
           val lo = s.params.get("min_chars").map(_.asLong()).getOrElse(0L)
           val hi = s.params.get("max_chars").map(_.asLong()).getOrElse(Long.MaxValue)
           df.filter(length(col(textCol)) >= lo && length(col(textCol)) <= hi)
         case "dedup_exact" =>
-          // keep the smallest id per exact normalized-text hash — the
-          // Dedup.exact policy as a semi-join back onto the pipeline frame
-          val keyed = df.select(col(idCol),
-            md5(graft.functions.Kernels.normalizeTextCol(col(textCol))).as("h"))
-          val keep = keyed.groupBy(col("h")).agg(min(col(idCol)).as(idCol))
-            .select(col(idCol))
-          df.join(keep, Seq(idCol), "left_semi")
+          // the Dedup.exact policy in one shuffle: the first row per exact
+          // normalized-text hash, in (id, text) order
+          val first = Window
+            .partitionBy(md5(graft.functions.Kernels.normalizeTextCol(col(textCol))))
+            .orderBy(col(idCol).asc_nulls_last, col(textCol))
+          df.withColumn(DedupRank, row_number().over(first))
+            .filter(col(DedupRank) === 1).drop(DedupRank)
         case "cap_per_source" =>
           Sampling.capPerStratum(df, idCol, s.params("source_col").asText(),
             s.params("k").asLong().toInt).drop("sample_rank")
@@ -188,18 +197,13 @@ object CurationPipeline {
           // evidence — all integer signals, keep == every rule passing
           val lo = s.params.get("min_words").map(_.asLong()).getOrElse(20L)
           val hi = s.params.get("max_words").map(_.asLong()).getOrElse(100000L)
-          val kept = TextAnalysis.gopherQuality(df, idCol, textCol, lo, hi)
-            .filter(col("keep") === 1L).select(col(idCol))
-          df.join(kept, Seq(idCol), "left_semi")
+          df.filter(TextAnalysis.gopherKeep(col(textCol), lo, hi) === 1L)
         case "filter_repetition" =>
           // drop docs whose duplicate-bigram share exceeds the threshold —
-          // integer per-mille comparison, no float in the gate condition
-          val mx = s.params("max_dup_permille").asLong()
-          val rep = TextAnalysis.withRepetition(df, idCol, textCol)
-            .filter((col("n_bigrams") - col("n_distinct_bigrams")) * 1000
-              <= lit(mx) * col("n_bigrams"))
-            .select(col(idCol))
-          df.join(rep, Seq(idCol), "left_semi")
+          // integer per-mille comparison, no float in the gate condition;
+          // a null text is dropped
+          df.filter(graft.functions.Kernels.repetitionKeepCol(col(textCol),
+            s.params("max_dup_permille").asLong()))
         case "extract_html" =>
           // the ingestion front door: textCol is raw HTML — replace it
           // with the boilerplate-stripped extraction and drop docs whose

@@ -27,24 +27,29 @@ object TextAnalysis {
     * divisions and power-of-two weights so it is bit-reproducible everywhere. */
   def withQuality(
       docs: DataFrame, idCol: String, textCol: String,
-      carry: Seq[String] = Nil): DataFrame = {
-    val toks = TextFns.tokens(col(textCol))
-    val nToks = size(toks).cast("double")
-    val diversity = when(size(toks) === 0, lit(0.0))
-      .otherwise(size(array_distinct(toks)).cast("double") / nToks)
+      carry: Seq[String] = Nil): DataFrame =
     docs.select((col(idCol) +: carry.map(col)) ++ Seq(
       length(col(textCol)).as("len_chars"),
-      size(toks).as("n_tokens"),
+      TextFns.tokenCount(col(textCol)).as("n_tokens"),
       TextFns.stopwordRatio(col(textCol), EnStopwords).as("stopword_ratio"),
       TextFns.charRatio(col(textCol), "[a-zA-Z]").as("alpha_ratio"),
-      diversity.as("token_diversity")): _*)
+      tokenDiversity(col(textCol)).as("token_diversity")): _*)
       .withColumn("quality_score", qualityScore(
         col("len_chars"), col("stopword_ratio"), col("alpha_ratio"), col("token_diversity")))
+
+  /** [[withQuality]]'s `quality_score` of one text column, for a row filter. */
+  def qualityScoreOf(text: Column): Column = qualityScore(length(text),
+    TextFns.stopwordRatio(text, EnStopwords), TextFns.charRatio(text, "[a-zA-Z]"),
+    tokenDiversity(text))
+
+  private def tokenDiversity(text: Column): Column = {
+    val toks = TextFns.tokens(text)
+    when(size(toks) === 0, lit(0.0))
+      .otherwise(size(array_distinct(toks)).cast("double") / size(toks).cast("double"))
   }
 
-  private def qualityScore(lenChars: org.apache.spark.sql.Column,
-      stopRatio: org.apache.spark.sql.Column, alphaRatio: org.apache.spark.sql.Column,
-      diversity: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def qualityScore(lenChars: Column, stopRatio: Column, alphaRatio: Column,
+      diversity: Column): Column =
     when(lenChars < 20, lit(0.0)).otherwise(lit(0.25)) +
       when(stopRatio.between(0.01, 0.6), lit(0.25)).otherwise(lit(0.0)) +
       when(alphaRatio >= 0.6, lit(0.25)).otherwise(lit(0.0)) +
@@ -581,22 +586,22 @@ object TextAnalysis {
     * boilerplate/spam in corpus filtering): share of a document's word
     * bigrams that are repeats of an earlier bigram. All-integer counts and
     * one final exact division — bit-reproducible. Pure projection, scan
-    * speed; composes with the existing kernels (`tokenCount`,
-    * `wordNgramsSorted`) so no new per-row pass is paid. */
+    * speed: both counts come from one byte scan
+    * (`Kernels.repetitionCounts`), the tokenization `filter_repetition`
+    * gates on. A null text has 0 bigrams and a null distinct count. */
   def withRepetition(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val total = greatest(TextFns.tokenCount(col(textCol)) - 1, lit(0L)).cast("long")
-    val distinctBigrams =
-      size(graft.functions.Kernels.wordNgramsSortedCol(col(textCol), 2)).cast("long")
-    docs.select(
-      col(idCol),
-      total.as("n_bigrams"),
-      distinctBigrams.as("n_distinct_bigrams"))
-      .withColumn(
-        "dup_bigram_frac",
-        when(col("n_bigrams") === 0, lit(0.0))
-          .otherwise((col("n_bigrams") - col("n_distinct_bigrams")).cast("double")
-            / col("n_bigrams").cast("double")))
+    val (n, d) = repetitionCounts(col(textCol))
+    docs.select(col(idCol), n.as("n_bigrams"), d.as("n_distinct_bigrams"),
+      dupBigramFrac(n, d).as("dup_bigram_frac"))
   }
+
+  private def repetitionCounts(text: Column): (Column, Column) = {
+    val counts = graft.functions.Kernels.repetitionCountsCol(text)
+    (coalesce(counts.getItem(0), lit(0L)), counts.getItem(1))
+  }
+
+  private def dupBigramFrac(n: Column, d: Column): Column =
+    when(n === 0, lit(0.0)).otherwise((n - d).cast("double") / n.cast("double"))
 
   /** Gopher-style repetition occupancy signals: the fraction of tokens
     * claimed by the single most frequent word and bigram — the filters the
@@ -887,23 +892,12 @@ object TextAnalysis {
       minQuality: Double = 0.5,
       allowedLangs: Seq[String] = Seq("en", "es", "de", "fr"),
       maxDupFrac: Double = 0.2): DataFrame = {
-    val toks = TextFns.tokens(col(textCol))
-    val diversity = when(size(toks) === 0, lit(0.0))
-      .otherwise(size(array_distinct(toks)).cast("double") / size(toks).cast("double"))
-    val score = qualityScore(
-      length(col(textCol)),
-      TextFns.stopwordRatio(col(textCol), EnStopwords),
-      TextFns.charRatio(col(textCol), "[a-zA-Z]"),
-      diversity)
-    val nBigrams = greatest(TextFns.tokenCount(col(textCol)) - 1, lit(0L)).cast("long")
-    val nDistinct = size(graft.functions.Kernels.wordNgramsSortedCol(col(textCol), 2)).cast("long")
-    val dupFrac = when(nBigrams === 0, lit(0.0))
-      .otherwise((nBigrams - nDistinct).cast("double") / nBigrams.cast("double"))
+    val (n, d) = repetitionCounts(col(textCol))
     docs.select(
       col(idCol),
-      score.as("quality_score"),
+      qualityScoreOf(col(textCol)).as("quality_score"),
       TextFns.langId(col(textCol)).as("predicted_lang"),
-      dupFrac.as("dup_bigram_frac"))
+      dupBigramFrac(n, d).as("dup_bigram_frac"))
       .withColumn(
         "keep",
         col("quality_score") >= minQuality &&
@@ -1560,23 +1554,33 @@ object TextAnalysis {
     * fired (the reason-code contract quality_check set). */
   def gopherQuality(docs: DataFrame, idCol: String, textCol: String,
       minWords: Long = 20L, maxWords: Long = 100000L): DataFrame = {
+    val g = gopherRules(col(textCol), minWords, maxWords)
+    docs.select(col(idCol), g.nWords.as("n_words"), g.meanWlenMilli.as("mean_wlen_milli"),
+      g.alphaPermille.as("alpha_permille"), g.stopHits.as("stop_hits"), g.keep.as("keep"))
+  }
+
+  /** [[gopherQuality]]'s `keep` flag (1 when every rule passes) of one text
+    * column, for a row filter. */
+  def gopherKeep(text: Column, minWords: Long, maxWords: Long): Column =
+    gopherRules(text, minWords, maxWords).keep
+
+  private final case class GopherRules(nWords: Column, meanWlenMilli: Column,
+      alphaPermille: Column, stopHits: Column, keep: Column)
+
+  private def gopherRules(text: Column, minWords: Long, maxWords: Long): GopherRules = {
     require(minWords >= 1 && maxWords >= minWords, "bad word bounds")
-    docs.select(col(idCol), TextFns.tokens(col(textCol)).as("w"))
-      .withColumn("n_words", size(col("w")).cast("long"))
-      .withColumn("sum_wlen", expr("aggregate(w, 0L, (a, x) -> a + length(x))"))
-      .withColumn("alpha_words",
-        expr("CAST(size(filter(w, x -> x rlike '[a-zA-Z]')) AS BIGINT)"))
-      .withColumn("stop_hits", expr(
-        "CAST(size(filter(w, x -> x IN ('the','a','an','and','of','to','in','is'))) AS BIGINT)"))
-      .withColumn("mean_wlen_milli", expr("sum_wlen * 1000 div nullif(n_words, 0)"))
-      .withColumn("alpha_permille", expr("alpha_words * 1000 div nullif(n_words, 0)"))
-      .withColumn("keep", coalesce(
-        col("n_words").between(minWords, maxWords) &&
-          col("mean_wlen_milli").between(3000L, 10000L) &&
-          col("alpha_permille") >= 800L && col("stop_hits") >= 2L,
-        lit(false)).cast("long"))
-      .select(col(idCol), col("n_words"), col("mean_wlen_milli"),
-        col("alpha_permille"), col("stop_hits"), col("keep"))
+    val w = TextFns.tokens(text)
+    val nWords = size(w).cast("long")
+    val sumWlen = aggregate(w, lit(0L), (a, x) => a + length(x))
+    val alphaWords = size(filter(w, x => x.rlike("[a-zA-Z]"))).cast("long")
+    val stopHits = size(filter(w, x =>
+      x.isin("the", "a", "an", "and", "of", "to", "in", "is"))).cast("long")
+    val meanWlenMilli = call_function("div", sumWlen * 1000, nullif(nWords, lit(0L)))
+    val alphaPermille = call_function("div", alphaWords * 1000, nullif(nWords, lit(0L)))
+    GopherRules(nWords, meanWlenMilli, alphaPermille, stopHits, coalesce(
+      nWords.between(minWords, maxWords) && meanWlenMilli.between(3000L, 10000L) &&
+        alphaPermille >= 800L && stopHits >= 2L,
+      lit(false)).cast("long"))
   }
 
   // ----- unigram-LM (SentencePiece-style) tokenizer training -----

@@ -437,6 +437,89 @@ class CurationSpec extends SparkSuite {
     assert(out.exists(_.getAs[Long]("doc_id") == 10L))
   }
 
+  test("repetition kernel equals the split and wordNgramsSorted counts on hostile, invalid and fuzzed text") {
+    import graft.functions.Kernels
+    val hostile = Seq("", "   \t\n  ", "nul\u0000byte and \u0007 bell", "\tleading and trailing tab\t",
+      "\u0001 control at the ends \u0001", " \u0001 a b \u0001 ", "a \u0000 b a \u0000 b",
+      "emoji 😀🤖 beyond 😀🤖 the BMP", "мама мыла раму мама мыла раму", "é e\u0301 é e\u0301",
+      "a  b\u000Bc\fd\re\n\n", "\t", " \t\u0000 ", "a b a b a b", ("word " * 30).trim,
+      "x" * 100000, null)
+    // cast from binary keeps the bytes: U+FFFD-colliding bytes, a lone
+    // continuation byte, an encoded surrogate, an overlong and a cut 4-byte lead
+    val invalid = Seq(
+      Array(0xff, 0x20, 0xfe, 0x20, 0xff, 0x20, 0xfe),
+      Array(0x61, 0x80, 0x20, 0xc3, 0xa9, 0x20, 0xed, 0xa0, 0x80, 0x09, 0xc0, 0xaf, 0x20, 0xf0, 0x9f, 0x20, 0x61, 0x80))
+      .map(_.map(_.toByte))
+    val rnd = new scala.util.Random(20261019L)
+    val alphabet = Seq(" ", "\t", "\n", "\u000B", "\f", "\r", "\u0000", "\u0001", "\u001F",
+      "a", "b", "é", "e\u0301", "д", "ж", "😀")
+    val pieces = alphabet.map(_.getBytes("UTF-8")) ++
+      Seq(Array(0x80), Array(0xc3), Array(0xff), Array(0xed, 0xa0, 0x80), Array(0xf0, 0x9f)).map(_.map(_.toByte))
+    val fuzzed = Seq.fill(3000)(Seq.fill(rnd.nextInt(40))(alphabet(rnd.nextInt(alphabet.size))).mkString)
+    val fuzzedBytes = Seq.fill(3000)(Seq.fill(rnd.nextInt(30))(pieces(rnd.nextInt(pieces.size))).flatten.toArray)
+    val bytes = (hostile ++ fuzzed).map(t => Option(t).map(_.getBytes("UTF-8")).orNull) ++
+      invalid ++ fuzzedBytes
+    val t = $"b".cast("string")
+    val df = bytes.toDF("b").select($"b", t.as("t"))
+    assert(df.filter($"b".isNotNull && !($"t".cast("binary") === $"b")).count() == 0)
+    // the counts and the gate filter_repetition used before the kernel
+    val n = greatest(size(split(trim($"t"), "\\s+")) - 1, lit(0)).cast("long")
+    val d = size(Kernels.wordNgramsSortedCol($"t", 2)).cast("long")
+    val k = Kernels.repetitionCountsCol($"t")
+    val gates = Seq(0L, 300L, 500L, 990L, 1000L).map { mx =>
+      Kernels.repetitionKeepCol($"t", mx) <=> ((n - d) * 1000 <= lit(mx) * n)
+    }
+    val same = coalesce(k.getItem(0), lit(0L)) === n && (k.getItem(1) <=> d) && gates.reduce(_ && _)
+    val bad = df.filter(!same).select($"t", n, d, k).collect()
+    assert(bad.isEmpty, bad.take(5).mkString("\n"))
+    assert(df.filter(k.isNull).count() == 1)
+  }
+
+  test("curation steps decide per row: duplicate ids, dedup keeps the smallest id then text") {
+    import graft.operators.CurationPipeline
+    val d = Seq[(java.lang.Long, String)](
+      (2L, "Same Text"), (1L, "same text"), (1L, "same  text"),
+      (1L, "other words here"),
+      (3L, "spam spam spam spam spam"), (3L, "three distinct words"),
+      (null, "text with a null id"), (4L, "Text with a null id"),
+      (null, "only a null id")).toDF("doc_id", "text")
+    val yaml =
+      """steps:
+        |  - { op: filter_repetition, max_dup_permille: 300 }
+        |  - { op: dedup_exact }
+        |""".stripMargin
+    val out = CurationPipeline.runYaml(d, "doc_id", "text", yaml)
+      .orderBy($"doc_id".asc_nulls_last, $"text").collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1))).toSeq
+    // id 3's repetitive row goes and its other row stays; of one normalized
+    // text the smallest id wins, a tie on id goes to the smaller text, and a
+    // null id loses to any id
+    assert(out == Seq(Some(1L) -> "other words here", Some(1L) -> "same  text",
+      Some(3L) -> "three distinct words", Some(4L) -> "Text with a null id",
+      None -> "only a null id"))
+  }
+
+  test("the benchmark's curation steps plan with no join and one repetition kernel call") {
+    import graft.operators.CurationPipeline
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val yaml =
+      """steps:
+        |  - { op: normalize }
+        |  - { op: filter_length, min_chars: 80, max_chars: 100000 }
+        |  - { op: filter_repetition, max_dup_permille: 300 }
+        |  - { op: dedup_exact }
+        |  - { op: cap_per_source, source_col: source, k: 2000 }
+        |  - { op: split, train: 0.8, val: 0.1, test: 0.1 }
+        |""".stripMargin
+    val plan = CurationPipeline.runYaml(docs, "doc_id", "text", yaml).queryExecution.optimizedPlan
+    assert(plan.collect { case j: Join => j }.isEmpty, plan.treeString)
+    val kernelCalls = plan.flatMap(_.expressions.flatMap(_.collect {
+      case i: StaticInvoke if i.functionName.startsWith("repetition") => i
+    }))
+    assert(kernelCalls.size == 1, plan.treeString)
+  }
+
   test("curation pipeline: step-indexed validation errors, composition equals manual chain") {
     import graft.operators.CurationPipeline
     // validation catches every defect at once, before any Spark job

@@ -3,7 +3,7 @@
 
 Usage:
   python3 tools/bench_pairs.py <parent-rev> --workloads gen_parquet,curate \
-      --seeds 1-10 [--seconds 8] [--trace 0] [--workdir DIR]
+      --seeds 1-10 [--seconds 8] [--trace 0] [--workdir DIR] [--record FILE]
 
 Exports <parent-rev> with `git archive` into DIR/parent-<sha> (reused by later
 calls, so its perfbench build is cached), then runs
@@ -17,6 +17,11 @@ delta of the medians (positive = the change is worse, in the metric's own
 direction), the bound from BENCHMARK.json, how many pairs the change won and
 the parent's interquartile range, plus attempted and failed operations per
 side. With --trace 1 the metrics are the per-layer ones, which have no bound.
+
+--record FILE appends one JSON line per workload to FILE (BENCH_HISTORY.jsonl
+keeps the runs a change's claim rests on): the parent sha, `git describe
+--always --dirty` of the working tree, the seeds, and per metric both medians,
+the relative delta, pairs won and the parent's IQR.
 
 A `git archive` export, not a worktree, so nothing is registered in the
 repository's .git and an interrupted run leaves nothing behind there. Reads
@@ -71,37 +76,66 @@ def quartiles(xs):
     return q[0], q[2]
 
 
-def report(workload, pairs, spec):
-    print(f"\n== {workload}: {len(pairs)} pairs")
+def sides(pairs):
+    """Per side: runs with a result, operations attempted and failed, runs
+    whose output checks failed."""
+    out = {}
     for side in ("parent", "change"):
-        runs = [p[side] for p in pairs]
-        ok = [r for r in runs if r is not None]
-        print(f"  {side:6s} runs {len(ok)}/{len(runs)} with a result, "
-              f"attempted {sum(r['attempted'] for r in ok)}, failed {sum(r['failed'] for r in ok)}, "
-              f"checks failed in {sum(1 for r in ok if not r['correct'])}")
+        ok = [p[side] for p in pairs if p[side] is not None]
+        out[side] = {"runs": len(ok), "attempted": sum(r["attempted"] for r in ok),
+                     "failed": sum(r["failed"] for r in ok),
+                     "checks_failed": sum(1 for r in ok if not r["correct"])}
+    return out
+
+
+def summarize(pairs, spec):
+    """Per metric over the pairs where both sides have a result: medians,
+    relative delta of the medians (positive = worse), pairs won, parent IQR."""
     full = [p for p in pairs if p["parent"] is not None and p["change"] is not None]
-    if not full:
-        return
-    names = [n for n in full[0]["parent"]["metrics"] if n in spec]
-    print(f"  {'metric':40s} {'parent':>12s} {'change':>12s} {'worse':>8s} {'bound':>6s} "
-          f"{'won':>6s} {'parent IQR':>12s}")
-    for name in names:
+    rows = []
+    for name in ([n for n in full[0]["parent"]["metrics"] if n in spec] if full else []):
         lower = spec[name]["better"] == "lower"
         ps = [p["parent"]["metrics"][name]["value"] for p in full]
         cs = [p["change"]["metrics"][name]["value"] for p in full]
         pm, cm = statistics.median(ps), statistics.median(cs)
         delta = (cm - pm) / pm if pm else 0.0
-        worse = delta if lower else -delta
-        won = sum(1 for a, b in zip(ps, cs) if (b < a if lower else b > a))
         q1, q3 = quartiles(ps)
-        bound = spec[name].get("bound")
+        rows.append({"metric": name, "parent_median": pm, "change_median": cm,
+                     "worse": delta if lower else -delta, "bound": spec[name].get("bound"),
+                     "won": sum(1 for a, b in zip(ps, cs) if (b < a if lower else b > a)),
+                     "pairs": len(full), "parent_iqr": q3 - q1})
+    return rows
+
+
+def report(workload, pairs, rows):
+    print(f"\n== {workload}: {len(pairs)} pairs")
+    for side, c in sides(pairs).items():
+        print(f"  {side:6s} runs {c['runs']}/{len(pairs)} with a result, "
+              f"attempted {c['attempted']}, failed {c['failed']}, checks failed in {c['checks_failed']}")
+    if not rows:
+        return
+    print(f"  {'metric':40s} {'parent':>12s} {'change':>12s} {'worse':>8s} {'bound':>6s} "
+          f"{'won':>6s} {'parent IQR':>12s}")
+    for r in rows:
         flag = ""
-        if bound is not None and worse > bound:
+        if r["bound"] is not None and r["worse"] > r["bound"]:
             flag = "  WORSE THAN BOUND"
-        elif abs(cm - pm) > q3 - q1 and won * 10 >= 9 * len(full):
-            flag = "  better" if worse < 0 else "  worse"
-        print(f"  {name:40s} {pm:12.4g} {cm:12.4g} {worse:+8.3f} "
-              f"{'' if bound is None else bound:>6} {won:>3d}/{len(full):<2d} {q3 - q1:12.4g}{flag}")
+        elif (abs(r["change_median"] - r["parent_median"]) > r["parent_iqr"]
+              and r["won"] * 10 >= 9 * r["pairs"]):
+            flag = "  better" if r["worse"] < 0 else "  worse"
+        print(f"  {r['metric']:40s} {r['parent_median']:12.4g} {r['change_median']:12.4g} "
+              f"{r['worse']:+8.3f} {'' if r['bound'] is None else r['bound']:>6} "
+              f"{r['won']:>3d}/{r['pairs']:<2d} {r['parent_iqr']:12.4g}{flag}")
+
+
+def record(path, workload, sha, args, pairs, rows):
+    change = subprocess.check_output(["git", "describe", "--always", "--dirty"],
+                                     cwd=ROOT, text=True).strip()
+    line = {"workload": workload, "parent": sha, "change": change, "seeds": args.seeds,
+            "seconds": args.seconds, "trace": int(args.trace), "sides": sides(pairs),
+            "metrics": rows}
+    with open(path, "a") as f:
+        f.write(json.dumps(line) + "\n")
 
 
 def main():
@@ -112,6 +146,7 @@ def main():
     ap.add_argument("--seconds", type=float, default=8)
     ap.add_argument("--trace", choices=("0", "1"), default="0")
     ap.add_argument("--workdir", default=os.path.join(tempfile.gettempdir(), "bench_pairs"))
+    ap.add_argument("--record", help="append one JSON summary line per workload to this file")
     args = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -138,7 +173,10 @@ def main():
                 shown = ", ".join(f"{n} {m[n]['value']:.4g}" for n in list(spec)[:4] if n in m)
                 print(f"{workload} seed {seed} {side}: {shown or 'no result'}", flush=True)
             pairs.append(pair)
-        report(workload, pairs, spec)
+        rows = summarize(pairs, spec)
+        report(workload, pairs, rows)
+        if args.record:
+            record(args.record, workload, sha, args, pairs, rows)
     return 0
 
 
