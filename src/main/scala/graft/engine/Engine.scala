@@ -24,8 +24,10 @@ import org.apache.spark.sql.functions._
 object Engine {
 
   /** DataFrame of one model (not yet written). */
-  def modelFrame(spark: SparkSession, cfg: GenerationConfig, model: ModelConfig): DataFrame = {
-    val plans = Planner.planModel(cfg, model)
+  def modelFrame(spark: SparkSession, cfg: GenerationConfig, model: ModelConfig): DataFrame =
+    frame(spark, model, Planner.planModel(cfg, model))
+
+  private def frame(spark: SparkSession, model: ModelConfig, plans: Seq[Planner.ColumnPlan]): DataFrame = {
     val rows = model.generateTo - model.generateFrom
     val partitions = choosePartitions(spark, rows, model)
     val base = spark.range(model.generateFrom, model.generateTo, 1, partitions)
@@ -96,6 +98,9 @@ object Engine {
       // progress counters to ONE model — the reference reports generation
       // progress as a per-model percentage map, not one job-wide number
       onModelStart(model.name)
+      // plans and sink options depend on the model, not on the slice
+      val plans = Planner.planModel(cfg, model)
+      val write = Output.modelWriter(spark, cfg, model, plans)
       // one ranged write per slice of `checkpoint_rows` rows (the whole
       // model when unset), each followed by its transactional checkpoint.
       // Values are pure functions of the absolute row id, so the slice
@@ -107,7 +112,7 @@ object Engine {
       while (a < model.generateTo) {
         val b = math.min(a + stride, model.generateTo)
         val slice = model.copy(generateFrom = a, generateTo = b)
-        Output.writeModel(spark, cfg, slice, modelFrame(spark, cfg, slice))
+        write(slice, frame(spark, slice, plans))
         onSliceDone(model.name, b)
         a = b
       }

@@ -2,6 +2,7 @@ package graft.engine
 
 import graft.JsonString
 import graft.config._
+import graft.gen.Planner
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
@@ -162,49 +163,60 @@ object Output {
     * commit, so payload and directory layout both match. */
   private val ShadowPrefix = "__p_"
 
-  def writeModel(spark: SparkSession, cfg: GenerationConfig, model: ModelConfig, df: DataFrame): Unit =
+  /** The write of one model's slices: `Engine.run` resolves it once per
+    * model and calls it with each `checkpoint_rows` slice and its frame.
+    * What depends on the model alone, parquet's per-column options and their
+    * format note, is resolved here, once per model per job. */
+  def modelWriter(
+      spark: SparkSession, cfg: GenerationConfig, model: ModelConfig,
+      plans: Seq[Planner.ColumnPlan]): (ModelConfig, DataFrame) => Unit =
     cfg.output match {
       case _: DevNullOutput =>
-        df.write.format("noop").mode(SaveMode.Overwrite).save()
+        (_, df) => df.write.format("noop").mode(SaveMode.Overwrite).save()
 
       case o: HttpOutput =>
-        HttpSink.write(df, model.name, o)
+        (_, df) => HttpSink.write(df, model.name, o)
 
       case o: ParquetOutput =>
-        // the timestamp unit is a session conf, not a writer option: set it
-        // for this write only and restore the caller's value afterwards
-        val key = "spark.sql.parquet.outputTimestampType"
-        val prev = spark.conf.getOption(key)
-        spark.conf.set(key, if (o.timestampUnit == "ms") "TIMESTAMP_MILLIS" else "TIMESTAMP_MICROS")
-        try commitFiles(spark, cfg, model, df, "parquet", parquetOptions(o, model))
-        finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        val options = parquetOptions(o, model, plans)
+        (slice, df) => {
+          // the timestamp unit is a session conf, not a writer option: set it
+          // for this write only and restore the caller's value afterwards
+          val key = "spark.sql.parquet.outputTimestampType"
+          val prev = spark.conf.getOption(key)
+          spark.conf.set(key, if (o.timestampUnit == "ms") "TIMESTAMP_MILLIS" else "TIMESTAMP_MICROS")
+          try commitFiles(spark, cfg, slice, df, "parquet", options)
+          finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        }
 
       case o: CsvOutput =>
         // float precision + datetime formatting parity with the reference CSV
         // writer (`writer/csv/csv.go:250-289`): floats rendered with fixed
         // precision, datetimes with the configured pattern or epoch seconds
-        val formatted = df.schema.fields.foldLeft(df) { (acc, f) =>
-          f.dataType match {
-            case FloatType | DoubleType =>
-              acc.withColumn(f.name, format_string(s"%.${o.floatPrecision}f", col(f.name)))
-            case TimestampType if o.datetimeFormat == "unix" =>
-              acc.withColumn(f.name, unix_timestamp(col(f.name)))
-            case _ => acc
-          }
-        }
         val pattern =
           if (o.datetimeFormat.nonEmpty && o.datetimeFormat != "unix") Map("timestampFormat" -> o.datetimeFormat)
           else Map.empty[String, String]
-        commitFiles(spark, cfg, model, formatted, "csv",
-          Map("header" -> (!o.withoutHeaders).toString, "sep" -> o.delimiter) ++ pattern)
+        val options = Map("header" -> (!o.withoutHeaders).toString, "sep" -> o.delimiter) ++ pattern
+        (slice, df) => {
+          val formatted = df.schema.fields.foldLeft(df) { (acc, f) =>
+            f.dataType match {
+              case FloatType | DoubleType =>
+                acc.withColumn(f.name, format_string(s"%.${o.floatPrecision}f", col(f.name)))
+              case TimestampType if o.datetimeFormat == "unix" =>
+                acc.withColumn(f.name, unix_timestamp(col(f.name)))
+              case _ => acc
+            }
+          }
+          commitFiles(spark, cfg, slice, formatted, "csv", options)
+        }
 
       case o: JsonlOutput =>
         // newline-delimited JSON: Spark's json writer is already one object
         // per line, splittable per partition — the natural corpus layout.
         // ignoreNullFields=false by default so every line carries the full
         // schema (downstream readers need not infer across files).
-        commitFiles(spark, cfg, model, df, "json",
-          Map("compression" -> o.compression, "ignoreNullFields" -> o.ignoreNullFields.toString))
+        val options = Map("compression" -> o.compression, "ignoreNullFields" -> o.ignoreNullFields.toString)
+        (slice, df) => commitFiles(spark, cfg, slice, df, "json", options)
     }
 
   /** The one commit every file sink shares: shadow columns for
@@ -228,15 +240,28 @@ object Output {
   }
 
   /** Parquet writer options: codec plus per-column encoding config (SURVEY
-    * §7). Dictionary on/off is per-column; v2-only encodings (DELTA_*)
-    * additionally need parquet.writer.version=v2 — parquet-mr then emits
-    * DELTA_BINARY_PACKED for ints and DELTA_BYTE_ARRAY for strings on the
-    * dictionary-off columns (footers asserted in ResumeSpec).
+    * §7).
+    *
+    * Dictionary on/off is per-column. A column the planner knows to be
+    * unique (`ColumnPlan.unique`) is written with its dictionary off: its
+    * dictionary never beats PLAIN, so parquet-mr would build one about as
+    * large as the plain data, fail its first-page size check and re-encode
+    * the page PLAIN. Switching it off skips that work and leaves the data
+    * pages as they were (the reference writer has dictionaries off by
+    * default, `writer/parquet/parquet.go:123`).
+    * Every other column keeps parquet-mr's default, dictionary on. A declared
+    * `parquet: { encoding }` wins over both: `*_DICT*` on, anything else off.
+    *
+    * v2-only encodings (DELTA_*) additionally need
+    * parquet.writer.version=v2 — parquet-mr then emits DELTA_BINARY_PACKED
+    * for ints and DELTA_BYTE_ARRAY for strings on the dictionary-off columns
+    * (footers asserted in ResumeSpec).
     * BYTE_STREAM_SPLIT has NO conf hook in parquet-hadoop 1.16
     * (ParquetOutputFormat exposes no key for it): declaring it still selects
     * v2 + dictionary-off but floats fall back to PLAIN — documented
     * divergence until parquet-mr exposes the knob. */
-  private def parquetOptions(o: ParquetOutput, model: ModelConfig): Map[String, String] = {
+  private[graft] def parquetOptions(
+      o: ParquetOutput, model: ModelConfig, plans: Seq[Planner.ColumnPlan]): Map[String, String] = {
     val encoded = model.columns.flatMap(c => c.parquet.map(c.name -> _.encoding.toUpperCase))
       .filter(_._2.nonEmpty)
     val v2Cols = encoded.collect {
@@ -248,11 +273,13 @@ object Output {
       // to format v2; say so instead of flipping silently (r14 ADVICE),
       // since v2 pages are unreadable to some older consumers
       System.err.println(
-        s"[output] note: column(s) ${v2Cols.sorted.mkString(", ")} declare " +
+        s"[output] note: column(s) ${v2Cols.sorted.mkString(", ")} of model ${model.name} declare " +
           "v2-only encodings; the whole parquet file for this model is " +
           "written as format v2 (parquet.writer.version is file-level)")
+    def dictionary(name: String, on: Boolean) = s"parquet.enable.dictionary#$name" -> on.toString
     Map("compression" -> o.compression) ++
-      encoded.map { case (name, enc) => s"parquet.enable.dictionary#$name" -> enc.contains("DICT").toString } ++
+      plans.filter(_.unique).map(p => dictionary(p.name, on = false)) ++
+      encoded.map { case (name, enc) => dictionary(name, enc.contains("DICT")) } ++ // declared wins
       (if (v2Cols.nonEmpty) Map("parquet.writer.version" -> "v2") else Map.empty)
   }
 

@@ -76,13 +76,18 @@ object Planner {
       math.min(math.floor(math.floor(number).toLong / rowsPerValue).toInt, enumValues.length - 1)
   }
 
+  /** @param unique the column's non-null values are pairwise distinct
+    *   across its model, but for rare rounding merges (see [[uniqueValues]]):
+    *   what the parquet sink reads to skip a dictionary that would never be
+    *   smaller than the plain data. */
   final case class ColumnPlan(
       name: String,
       dataType: DataType,
       nullable: Boolean,
       cycle: Long, // row-index cycle of the top sequencer
       dataColumnSeed: Long, // seed of the (FK-resolved) data column
-      ranges: Seq[RangePlan]) {
+      ranges: Seq[RangePlan],
+      unique: Boolean) {
 
     private[this] val rangeArray: Array[RangePlan] = ranges.toArray
 
@@ -331,6 +336,83 @@ object Planner {
       r.nullPercentage > 0 || r.values.exists(_.contains(null)))
 
     ColumnPlan(
-      column.name, sparkType(dataColumn), nullable, cycle, dataColumnSeed, rangePlans)
+      column.name, sparkType(dataColumn), nullable, cycle, dataColumnSeed, rangePlans,
+      uniqueValues(model.rowsCount, cycle, rangePlans))
+  }
+
+  /** Whether rows [0, rows) of a column get pairwise distinct non-null
+    * values, but for rare rounding merges of two neighbouring value numbers.
+    *
+    * Value numbers first: with one range, `cycle ≥ rows` makes the routing
+    * number the row id itself; `distinct ≥ rows` keeps the permuted
+    * position `k mod distinct` = `k`, so the permutation gives each row its
+    * own number, and an ordered range's `floor(k·distinct/spanRows)` is
+    * one-to-one when `distinct ≥ spanRows`. Enum literals repeat by design.
+    *
+    * Then the domain. Jitter moves a number by less than `jitterFactor` =
+    * `1 − distinct/domain`, so two numbers stay more than `distinct/domain`
+    * apart, and a domain that gives each value a stretch of that width
+    * (integers, names) maps them apart exactly; uuids' stretches are far
+    * narrower. A datetime keeps them apart when its bounds share their
+    * nanos (its seconds then step like an integer's); otherwise the nanos
+    * step separately and the µs truncation can merge values. Float values are
+    * interpolated, so rounding can merge two neighbours: the step between
+    * value numbers must span at least 1024 ulps at the column's width. Strings
+    * need [[stringsApart]]. */
+  private def uniqueValues(rows: Long, cycle: Long, ranges: Seq[RangePlan]): Boolean = ranges match {
+    case Seq(r) if r.enumValues == null && cycle >= rows && r.distinct >= rows &&
+        (!r.ordered || r.distinct >= r.spanRows) =>
+      if (r.time != null) r.time.fromNanos == r.time.toNanos
+      else if (r.float != null) {
+        val edge = math.max(math.abs(r.float.from), math.abs(r.float.to))
+        val ulp = if (r.float32) math.ulp(edge.toFloat).toDouble else math.ulp(edge)
+        (r.float.to - r.float.from) / r.total >= 1024 * ulp
+      } else if (r.spec != null) stringsApart(r)
+      else true
+    case _ => false
+  }
+
+  /** Whether a string range maps distinct value numbers to distinct strings.
+    * Names take one `orderedLong` step each, as integers do, and a template
+    * one mixed-radix digit string: its stretch, `total / Π letters`, is no
+    * wider than the `total / Σ letters^count` its domain size gives. A text
+    * needs [[textsDistinct]]. Phones and plain strings cut the numbers into
+    * stretches wider than that: two neighbours share a stretch of width `w`
+    * only when their jitters close their gap of about 1 to below `w`, which
+    * has a chance of at most `w²/2`. A width of at most 1/100 keeps that to
+    * 5e-5 of neighbouring pairs; a short string's lengths, where every
+    * string of the charset is used, have stretches of width 1. */
+  private def stringsApart(r: RangePlan): Boolean = {
+    val s = r.spec
+    if (s.template.nonEmpty) true
+    else s.logicalType match {
+      case "first_name" | "last_name" => true
+      case "phone" =>
+        s.phonePatterns.nonEmpty &&
+          r.total / s.phonePatterns.map(p => math.pow(10, p.count(_ == '#'))).min <= 0.01
+      case "text" => textsDistinct(r)
+      case _ => (s.minLength to s.maxLength).forall(l => s.countByPrefix(l) <= 0.01)
+    }
+  }
+
+  /** Whether [[Values.text]] maps distinct value numbers of `r` to distinct
+    * texts. A number's length group is its floor mod `spread`, so two numbers
+    * of one group lie more than `spread − jitterFactor` apart, and its rank
+    * among the texts of padded length `len + 1` scales it by
+    * `(completions − 1) / total`. Distinct ranks are distinct word sequences,
+    * except that the text is cut to `len`, which drops a closing one-letter
+    * word: the `oneLetterWords` texts of one such block merge. So every
+    * group's rank step must exceed that block plus one, with room for the
+    * double rounding of ranks near 2^63. A short `min_length` fails this: a
+    * few completions shared by `rows / spread` numbers. */
+  private def textsDistinct(r: RangePlan): Boolean = {
+    val s = r.spec
+    val spread = s.maxLength - s.minLength + 1
+    val block = math.max(1, s.locale.oneLetterWords.length) + 1
+    val budget = s.completions.length - 1
+    (s.minLength to s.maxLength).forall { len =>
+      val c = s.completions(math.min(len + 1, budget)).toDouble
+      (c - 1) * (spread - r.jitterFactor) >= (block + c * 1e-15) * r.total
+    }
   }
 }

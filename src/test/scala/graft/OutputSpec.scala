@@ -14,8 +14,9 @@ import java.util.Locale
 import scala.jdk.CollectionConverters._
 
 /** File-sink pins: the csv writer options and value formatting, parquet's
-  * timestamp unit, the local file system's modes and sidecars, and the
-  * backup metadata under concurrent jobs and processes. */
+  * timestamp unit and per-column dictionaries, the local file system's
+  * modes and sidecars, and the backup metadata under concurrent jobs and
+  * processes. */
 class OutputSpec extends SparkSuite {
 
   private def csvYaml(dir: String, params: String): String =
@@ -270,6 +271,219 @@ class OutputSpec extends SparkSuite {
     assert(fingerprints.contains(json.path("fingerprint").asText()), json)
     val leftovers = new java.io.File(dir).listFiles().map(_.getName).filter(_ != "backup.json")
     assert(leftovers.isEmpty, leftovers.toSeq)
+  }
+
+  /** A `gen_parquet`-shaped job at test size: unique ids, names, phones,
+    * templates, datetimes and uuids next to enum, few-valued and FK columns,
+    * an FK child partitioned by status with `rows_per_file`, and two
+    * `checkpoint_rows` slices per model. The child's tasks hold 8 rows per
+    * parent id and the parent's names are at most 3 letters long, so
+    * `customer_id` and `first_name` repeat inside every file. */
+  private def uniqueYaml(dir: String, idParquet: String): String =
+    s"""
+       |random_seed: 11
+       |output: { type: parquet, dir: $dir, params: { compression_codec: snappy } }
+       |models:
+       |  customers:
+       |    rows_count: 500
+       |    checkpoint_rows: 250
+       |    columns:
+       |      - { name: id, type: integer, type_params: { bit_width: 64, from: 1, to: 9000000000000000000 }, distinct_percentage: 1, ordered: true $idParquet }
+       |      - { name: first_name, type: string, type_params: { logical_type: first_name, max_length: 3 } }
+       |      - { name: phone, type: string, type_params: { logical_type: phone } }
+       |      - { name: passport, type: string, type_params: { template: "AA 00 000 000" } }
+       |      - { name: created_at, type: datetime, ordered: true, type_params: { from: "2015-01-01T00:00:00Z", to: "2025-01-01T00:00:00Z" } }
+       |      - { name: token, type: uuid }
+       |      - { name: tier, type: string, values: [bronze, silver, gold, platinum] }
+       |  orders:
+       |    rows_count: 32000
+       |    rows_per_file: 4000
+       |    checkpoint_rows: 16000
+       |    partition_columns: [ { name: status } ]
+       |    columns:
+       |      - { name: customer_id, foreign_key: customers.id }
+       |      - { name: status, type: string, values: [cancelled, new, paid, shipped] }
+       |      - { name: amount, type: float, type_params: { bit_width: 64, from: 0.5, to: 5000 } }
+       |      - name: quantity
+       |        type: integer
+       |        ranges:
+       |          - { type_params: { from: 1, to: 9 }, range_percentage: 0.85 }
+       |          - { type_params: { from: 100, to: 999 }, range_percentage: 0.15 }
+       |      - { name: note, type: string, null_percentage: 0.4, type_params: { logical_type: text, min_length: 16, max_length: 96 } }
+       |      - { name: placed_at, type: datetime, type_params: { from: "2015-01-01T00:00:00Z", to: "2025-01-01T00:00:00Z" } }
+       |""".stripMargin
+
+  /** A data file's path under its model dir, without the write job's UUID:
+    * the same task and file counter of the same slice gets the same key. */
+  private def fileKey(root: java.io.File, f: java.io.File): String =
+    root.toPath.relativize(f.toPath).toString
+      .replaceAll("-[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "")
+
+  /** Keys of the files each slice added under a model dir, in slice order. */
+  private final class SliceFiles(root: java.io.File) {
+    private var seen = Set.empty[String]
+    val slices = Seq.newBuilder[Map[String, java.io.File]]
+    def mark(): Unit = {
+      val now = dataFiles(root).map(f => f.getPath -> f).toMap
+      slices += (now -- seen).values.map(f => fileKey(root, f) -> f).toMap
+      seen = now.keySet
+    }
+  }
+
+  /** The thrift footer with each column chunk's `encodings` list sorted,
+    * and the offset where it starts. */
+  private def footer(f: java.io.File): (org.apache.parquet.format.FileMetaData, Int) = {
+    val bytes = Files.readAllBytes(f.toPath)
+    val len = java.nio.ByteBuffer.wrap(bytes, bytes.length - 8, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    val start = bytes.length - 8 - len
+    val meta = org.apache.parquet.format.Util.readFileMetaData(
+      new java.io.ByteArrayInputStream(bytes, start, len))
+    meta.getRow_groups.asScala.flatMap(_.getColumns.asScala).foreach { c =>
+      val md = c.getMeta_data
+      md.setEncodings(md.getEncodings.asScala.sortBy(_.getValue).asJava)
+    }
+    (meta, start)
+  }
+
+  private val uniqueColumns = Map(
+    "customers" -> Set("id", "phone", "passport", "created_at", "token"),
+    "orders" -> Set("amount", "note", "placed_at"))
+  private val dictionaryColumns = Map(
+    "customers" -> Set("first_name", "tier"),
+    "orders" -> Set("quantity", "customer_id"))
+
+  /** Runs [[uniqueYaml]] through `Engine.run`, writes the same slices again
+    * with a dictionary forced on for every column that declares no encoding
+    * (what every such column got before the planner's unique fact), and
+    * checks that every pair of files agrees byte for byte up to the footer,
+    * and in the footer up to the order of `encodings`; that the unique
+    * columns have no dictionary page and the repeating ones one in every
+    * file; and that the run printed one writer-v2 note per model that
+    * declares a DELTA column, whatever its slice count. */
+  private def checkUniqueWrite(idParquet: String): Unit = {
+    val dir = Files.createTempDirectory("pqunique").toString
+    val refDir = Files.createTempDirectory("pqdictref").toString
+    val cfg = ConfigParser.parseYaml(uniqueYaml(dir, idParquet))
+    val o = cfg.output.asInstanceOf[graft.config.ParquetOutput]
+    val models = cfg.activeModels
+    val ours = models.map(m => m.name -> new SliceFiles(new java.io.File(Output.modelPath(cfg, m)))).toMap
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try Engine.run(spark, cfg, onSliceDone = (m, _) => ours(m).mark())
+    finally System.setErr(stderr)
+    // the writer-v2 note comes once per model and job, not once per slice
+    val notes = err.toString.linesIterator.count(_.startsWith("[output] note"))
+    assert(notes == models.count(_.columns.exists(_.parquet.exists(_.encoding.startsWith("DELTA_")))), err)
+
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "TIMESTAMP_MICROS")
+    val ref = try models.map { m =>
+      val root = new java.io.File(s"$refDir/${m.modelDir}")
+      val files = new SliceFiles(root)
+      val options = Output.parquetOptions(o, m, Nil) + ("parquet.enable.dictionary" -> "true")
+      (0L until m.rowsCount by m.checkpointRows).foreach { a =>
+        val slice = m.copy(generateFrom = a, generateTo = math.min(a + m.checkpointRows, m.rowsCount))
+        val w = Engine.modelFrame(spark, cfg, slice).write.format("parquet").options(options)
+          .option("maxRecordsPerFile", m.rowsPerFile).mode("append")
+        (if (m.partitionColumns.isEmpty) w else w.partitionBy(m.partitionColumns.map(_.name): _*)).save(root.getPath)
+        files.mark()
+      }
+      m.name -> files.slices.result()
+    }.toMap
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+
+    models.foreach { m =>
+      val (a, b) = (ours(m.name).slices.result(), ref(m.name))
+      assert(a.size == 2 && a.map(_.keySet) == b.map(_.keySet), s"${m.name}: ${a.map(_.keySet)} vs ${b.map(_.keySet)}")
+      val pairs = a.zip(b).flatMap { case (x, y) => x.keys.toSeq.sorted.map(k => (x(k), y(k))) }
+      val dictPages = pairs.map { case (ourFile, refFile) =>
+        val (ourMeta, ourStart) = footer(ourFile)
+        val (refMeta, refStart) = footer(refFile)
+        assert(ourStart == refStart && ourFile.length == refFile.length, s"$ourFile vs $refFile")
+        val (x, y) = (Files.readAllBytes(ourFile.toPath), Files.readAllBytes(refFile.toPath))
+        assert(java.util.Arrays.equals(x, 0, ourStart, y, 0, refStart), s"data pages differ: $ourFile vs $refFile")
+        assert(ourMeta == refMeta, s"$ourFile footer\n$ourMeta\nvs\n$refMeta")
+        ourMeta.getRow_groups.asScala.flatMap(_.getColumns.asScala).map { c =>
+          c.getMeta_data.getPath_in_schema.asScala.mkString(".") -> c.getMeta_data.isSetDictionary_page_offset
+        }.groupMap(_._1)(_._2)
+      }
+      def pages(c: String) = dictPages.flatMap(_.getOrElse(c, Nil))
+      uniqueColumns(m.name).foreach(c => assert(pages(c).nonEmpty && !pages(c).exists(identity), s"${m.name}.$c"))
+      dictionaryColumns(m.name).foreach(c => assert(pages(c).nonEmpty && pages(c).forall(identity), s"${m.name}.$c"))
+    }
+  }
+
+  test("unique columns are written with no dictionary, byte for byte as with one") {
+    val cfg = ConfigParser.parseYaml(uniqueYaml("/tmp/unused", ""))
+    val facts = cfg.activeModels.map(m =>
+      m.name -> graft.gen.Planner.planModel(cfg, m).filter(_.unique).map(_.name).toSet).toMap
+    assert(facts == uniqueColumns, facts)
+    checkUniqueWrite("")
+  }
+
+  test("a declared DELTA column puts the model on writer v2, and unique columns still match") {
+    checkUniqueWrite(", parquet: { encoding: DELTA_BINARY_PACKED }")
+  }
+
+  test("the unique fact and the dictionary options: a declared encoding wins") {
+    val cfg = ConfigParser.parseYaml(
+      """
+        |random_seed: 5
+        |output: { type: parquet, dir: /tmp/unused }
+        |models:
+        |  p:
+        |    rows_count: 1000
+        |    columns:
+        |      - { name: v, type: integer, type_params: { bit_width: 64 }, distinct_percentage: 0.5, ordered: true }
+        |  m:
+        |    rows_count: 400
+        |    columns:
+        |      - { name: id, type: integer, type_params: { bit_width: 64 }, distinct_percentage: 1, ordered: true }
+        |      - { name: u_dict, type: uuid, parquet: { encoding: RLE_DICTIONARY } }
+        |      - { name: u_plain, type: uuid, parquet: { encoding: PLAIN } }
+        |      - { name: few, type: integer, type_params: { from: 1, to: 9 } }
+        |      - { name: pick, type: string, values: [a, b] }
+        |      - { name: half, type: integer, type_params: { bit_width: 64 }, distinct_percentage: 0.5 }
+        |      - { name: fk_ordered, foreign_key: p.v, foreign_key_order: true }
+        |      - { name: wide, type: float, type_params: { bit_width: 64, from: 0.5, to: 5000 } }
+        |      - { name: narrow, type: float, type_params: { bit_width: 32, from: 1, to: 1.0001 } }
+        |      - { name: seconds, type: datetime, type_params: { from: "2020-01-01T00:00:00Z", to: "2020-01-02T00:00:00Z" } }
+        |      - { name: sub_second, type: datetime, type_params: { from: "2020-01-01T00:00:00Z", to: "2020-01-01T00:00:01.5Z" } }
+        |      - { name: note, type: string, type_params: { logical_type: text, min_length: 16, max_length: 96 } }
+        |      - { name: short_note, type: string, type_params: { logical_type: text, min_length: 1, max_length: 8 } }
+        |      - { name: one_length, type: string, type_params: { logical_type: text, min_length: 40, max_length: 40 } }
+        |      - { name: code, type: string, type_params: { min_length: 1, max_length: 3 } }
+        |      - { name: slug, type: string, type_params: { min_length: 8, max_length: 12 } }
+        |      - { name: plate, type: string, type_params: { template: "A 000 aa" } }
+        |      - { name: phone, type: string, type_params: { logical_type: phone } }
+        |""".stripMargin)
+    val m = cfg.model("m")
+    val plans = graft.gen.Planner.planModel(cfg, m)
+    // the FK's parent positions repeat (500 values over its 1000-row span);
+    // the float32 and sub-second ranges round distinct numbers together; a
+    // short text's first length groups hold a few texts each, a text of one
+    // length leaves its jittered ranks no room, and a short string's
+    // one-letter values each take a stretch of one value number
+    val unique = Set("id", "u_dict", "u_plain", "wide", "seconds", "note", "slug", "plate", "phone")
+    assert(plans.filter(_.unique).map(_.name).toSet == unique)
+    def values(name: String) = {
+      val p = plans.find(_.name == name).get
+      (0L until m.rowsCount).map(p.valueAt)
+    }
+    unique.foreach { c =>
+      val vs = values(c)
+      assert(!vs.contains(null) && vs.distinct.size == vs.size, c)
+    }
+    Seq("short_note", "code").foreach { c =>
+      val vs = values(c)
+      assert(vs.distinct.size < vs.size, c)
+    }
+    val dictionary = Output.parquetOptions(cfg.output.asInstanceOf[graft.config.ParquetOutput], m, plans)
+      .collect { case (k, v) if k.startsWith("parquet.enable.dictionary#") => k.stripPrefix("parquet.enable.dictionary#") -> v }
+    assert(dictionary == (unique - "u_dict").map(_ -> "false").toMap + ("u_dict" -> "true"), dictionary)
   }
 
   test("fingerprint of a fixed two-model config is stable, so older backups still resume") {
